@@ -74,4 +74,17 @@ object GraftSession {
     graft.functions.GraftFunctions.registerAll(s)
     s
   }
+
+  /** Run `body` with each `key -> value` set on `spark`'s session conf,
+    * then restore every key to its previous value — or unset it when it
+    * had none — whether `body` returns or throws. */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(
+      body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -393,8 +393,9 @@ object Audit {
     * spliced into every builder and oracle string (the round-17 advice:
     * dq07 restating `% 11 = 5` as literals while st27 introduced
     * St27DelMod meant editing either site silently desynchronized the
-    * two audits' recipes). The St26/St27 constant families are
-    * aliases of these. */
+    * two audits' recipes). CopyOffset clears every fixture's id range
+    * (incl. sf10's 499,999 max), so a copy never collides with a real
+    * id. */
   private[operators] val AuditDelMod = 11L
   private[operators] val AuditDelRem = 5L
   private[operators] val AuditDriftMod = 13L
@@ -477,9 +478,8 @@ object Audit {
     import s.implicits._
     val docs = Tables.documents(s, d)
     // REINDEX-time snapshot -> the real stored layout, read back
-    val idx = s"${System.getProperty("java.io.tmpdir")}/graft_dq06_" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.Writers.rmrf(new java.io.File(idx))
+    val idx = graft.sources.Writers.scratchDir("dq06", d)
+    graft.sources.Writers.freshScratch(s, idx)
     // snapshot once: writeLexIndex's two legs both consume the capped
     // postings (the w12 lloyd() precedent — un-checkpointed, the sizes
     // leg re-ran the whole tokenize + corpus-wide df aggregate)
@@ -686,9 +686,8 @@ object Audit {
     val cents = snap.filter($"vec_id" % snapMod === 7)
       .select($"vec_id".as("c_id"), $"embedding".as("c_vec"),
         $"nrm".as("c_nrm"))
-    val idx = s"${System.getProperty("java.io.tmpdir")}/graft_dq07_" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.Writers.rmrf(new java.io.File(idx))
+    val idx = graft.sources.Writers.scratchDir("dq07", d)
+    graft.sources.Writers.freshScratch(s, idx)
     graft.sources.Writers.writeIvfIndex(cents,
       Similarity.ivfAssignment(snap, cents), idx)
     val (rc, rl) = graft.sources.Writers.readIvfIndex(s, idx)
@@ -833,21 +832,9 @@ object Audit {
       |UNION ALL SELECT 'stale_claims', CAST(n AS BIGINT) FROM stale
       |UNION ALL SELECT 'unmanifested_buckets', CAST(n AS BIGINT)
       |FROM unmani""".stripMargin) { (s, d) =>
-    import s.implicits._
-    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_dq08_" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.Writers.rmrf(new java.io.File(dest))
-    // the standard 3-version chain (w10's construction, real manifests)
-    val orders = Tables.orders(s, d)
-      .select($"o_orderkey", $"o_custkey", $"o_orderdate",
-        $"o_orderstatus", $"o_totalprice")
-    WriterQueries.scd2WriteVersion(WriterQueries.scd2History(
-      WriterQueries.scd2Changes(orders.filter($"o_orderdate" < Dq08Cutoff))),
-      dest, 0L)
-    WriterQueries.scd2MergeStep(dest, 0L, orders.filter(
-      $"o_orderdate" >= Dq08Cutoff && $"o_orderdate" < Dq08Horizon))
-    WriterQueries.scd2MergeStep(dest, 1L,
-      orders.filter($"o_orderdate" >= Dq08Horizon))
+    val dest = graft.sources.Writers.scratchDir("dq08", d)
+    graft.sources.Writers.freshScratch(s, dest)
+    WriterQueries.scd2ThreeVersions(s, d, dest)
     val (fs, root) = graft.sources.Writers.fsOf(s, dest)
     // (a) crash-stranded commit: v2's manifest gone, its data intact
     fs.delete(new org.apache.hadoop.fs.Path(root,

@@ -1475,13 +1475,14 @@ object Dedup {
     import s.implicits._
     // the two legs write DISTINCT dirs off independent job chains —
     // wall is max not sum (guide §2.6, the writeLexIndex precedent)
-    graft.sources.Writers.inParallel(
-      corpusBandIndex(corpus)
-        .sortWithinPartitions("band")
-        .write.mode(mode).partitionBy("band").parquet(s"$dest/bands"),
+    graft.sources.Writers.inFlight(
       spread(corpus).select($"doc_id".as("corpus_id"),
           shingleSet($"text").as("sh_c"))
-        .write.mode(mode).parquet(s"$dest/shingles"))
+        .write.mode(mode).parquet(s"$dest/shingles")) { _ =>
+      corpusBandIndex(corpus)
+        .sortWithinPartitions("band")
+        .write.mode(mode).partitionBy("band").parquet(s"$dest/bands")
+    }
   }
 
   /** Reads a [[writeNearDupIndex]] directory back as the (bands,

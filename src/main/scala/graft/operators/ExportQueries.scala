@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.Q
-import graft.sources.{Exporters, Tables}
+import graft.sources.{Exporters, Tables, Writers}
 
 /** Driver-checkable EXPORT/IMPORT round trips (reference EXPORT TABLE /
   * IMPORT surface — SURVEY.md §2.2): data leaves through
@@ -10,9 +10,6 @@ import graft.sources.{Exporters, Tables}
   * re-aggregate must match the oracle over the ORIGINAL table —
   * proving schema + content + partition fidelity end-to-end. */
 object ExportQueries {
-
-  private def tmp(d: String, kind: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_exp_${d.replaceAll("[^A-Za-z0-9]", "_")}/$kind"
 
   /** e01: flat export/import of the supplier table. */
   val e01ExportImport: Q = Q(
@@ -22,7 +19,7 @@ object ExportQueries {
       |  min(s_name) AS first_name
       |FROM supplier GROUP BY s_nationkey""".stripMargin) { (s, d) =>
     import s.implicits._
-    val dir = tmp(d, "supplier")
+    val dir = s"${Writers.scratchDir("exp", d)}/supplier"
     Exporters.exportTable(Tables.supplier(s, d), dir)
     Exporters.importTable(s, dir, "supplier_imp")
     s.table("supplier_imp")
@@ -39,7 +36,7 @@ object ExportQueries {
       |  CAST(sum(length(text)) AS BIGINT) AS total_chars
       |FROM documents GROUP BY lang""".stripMargin) { (s, d) =>
     import s.implicits._
-    val dir = tmp(d, "documents")
+    val dir = s"${Writers.scratchDir("exp", d)}/documents"
     Exporters.exportTable(
       Tables.documents(s, d).select($"doc_id", $"text", $"lang"),
       dir, partitionCols = Seq("lang"))

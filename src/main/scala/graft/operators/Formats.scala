@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
-import graft.sources.Tables
+import graft.sources.{Tables, Writers}
 
 /** Source/sink format coverage (SURVEY.md §2.2): CSV, JSON, ORC, Avro
   * round-trips. Each query writes a slice of the fixture data in the
@@ -16,14 +16,11 @@ import graft.sources.Tables
   * calls pointed at distributed storage. */
 object Formats {
 
-  private def tmp(d: String, fmt: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_fmt_${d.replaceAll("[^A-Za-z0-9]", "_")}/$fmt"
-
   private def roundTrip(s: SparkSession, d: String, fmt: String,
       options: Map[String, String] = Map.empty): DataFrame = {
     import s.implicits._
     val src = Tables.supplier(s, d)
-    val dest = tmp(d, fmt)
+    val dest = s"${Writers.scratchDir("fmt", d)}/$fmt"
     src.write.format(fmt).options(options).mode("overwrite").save(dest)
     val r = s.read.format(fmt).options(options)
     val back = (if (fmt == "csv" || fmt == "json" || fmt == "xml")
@@ -96,7 +93,7 @@ object Formats {
     val ext = Map("gzip" -> ".gz.parquet", "snappy" -> ".snappy.parquet",
       "zstd" -> ".zstd.parquet")
     Seq("gzip", "snappy", "zstd").map { c =>
-      val dest = tmp(d, s"parquet_$c")
+      val dest = s"${Writers.scratchDir("fmt", d)}/parquet_$c"
       Tables.supplier(s, d).write.option("compression", c)
         .mode("overwrite").parquet(dest)
       s.read.parquet(dest)
@@ -124,7 +121,7 @@ object Formats {
       |FROM orders WHERE o_orderkey < 1000
       |GROUP BY o_orderstatus""".stripMargin) { (s, d) =>
     import s.implicits._
-    val dest = tmp(d, "regex_serde")
+    val dest = s"${Writers.scratchDir("fmt", d)}/regex_serde"
     Tables.orders(s, d).filter($"o_orderkey" < 1000)
       .select(concat(lit("key="), $"o_orderkey", lit(" status="),
         $"o_orderstatus", lit(" total="), $"o_totalprice".cast("string"))
@@ -150,7 +147,7 @@ object Formats {
       |  SELECT l_orderkey || '|' || l_linenumber AS line
       |  FROM lineitem WHERE l_orderkey < 100)""".stripMargin) { (s, d) =>
     import s.implicits._
-    val dest = tmp(d, "text")
+    val dest = s"${Writers.scratchDir("fmt", d)}/text"
     Tables.lineitem(s, d).filter($"l_orderkey" < 100)
       .select(concat($"l_orderkey", lit("|"), $"l_linenumber").as("value"))
       .write.mode("overwrite").text(dest)
@@ -179,7 +176,7 @@ object Formats {
       |  WHERE o_orderkey % 2 = 1)
       |GROUP BY o_orderstatus""".stripMargin) { (s, d) =>
     import s.implicits._
-    val dest = tmp(d, "evolve")
+    val dest = s"${Writers.scratchDir("fmt", d)}/evolve"
     val o = Tables.orders(s, d)
     o.filter($"o_orderkey" % 2 === 0)
       .select($"o_orderkey", $"o_orderstatus")

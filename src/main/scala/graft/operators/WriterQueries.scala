@@ -12,9 +12,6 @@ import graft.sources.{Tables, Writers}
   */
 object WriterQueries {
 
-  private def tmp(d: String, kind: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_wq_${d.replaceAll("[^A-Za-z0-9]", "_")}/$kind"
-
   /** w01: sort-merge-bucket join content check. The join itself is
     * shuffle-free (PlanSpec asserts zero Exchange); here the JOINED
     * content is differential-checked against a plain oracle join. */
@@ -44,7 +41,7 @@ object WriterQueries {
       |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
       |FROM documents GROUP BY lang""".stripMargin) { (s, d) =>
     import s.implicits._
-    val dest = tmp(d, "partitioned")
+    val dest = s"${Writers.scratchDir("wq", d)}/partitioned"
     Writers.writePartitioned(
       Tables.documents(s, d).select($"doc_id", $"text", $"lang"),
       "lang", dest)
@@ -66,8 +63,8 @@ object WriterQueries {
       |  count(DISTINCT l_orderkey) AS n_orders
       |FROM lineitem WHERE l_orderkey < 2000""".stripMargin) { (s, d) =>
     import s.implicits._
-    val src = tmp(d, "shards")
-    val dest = tmp(d, "compacted")
+    val src = s"${Writers.scratchDir("wq", d)}/shards"
+    val dest = s"${Writers.scratchDir("wq", d)}/compacted"
     Tables.lineitem(s, d).filter($"l_orderkey" < 2000)
       .repartition(20)
       .write.mode("overwrite").parquet(src)
@@ -241,7 +238,7 @@ object WriterQueries {
   val w06BandIndex: Q = Q(
     "w06_band_index", Dedup.d12OracleSql) { (s, d) =>
     import s.implicits._
-    val dest = tmp(d, "band_index")
+    val dest = s"${Writers.scratchDir("wq", d)}/band_index"
     Writers.freshScratch(s, dest) // stale index of an old fixture
     val corpus = Dedup.d12Corpus(s, d)
     Dedup.writeNearDupIndex(
@@ -277,7 +274,8 @@ object WriterQueries {
   /** Where w07 materializes the stored ANN index for fixture `d` —
     * public so SimilaritySpec reads the REAL layout instead of
     * re-deriving the scratch-path convention. */
-  def annIndexDir(d: String): String = tmp(d, "ann_index")
+  def annIndexDir(d: String): String =
+    s"${Writers.scratchDir("wq", d)}/ann_index"
 
   val w07AnnIndex: Q = Q(
     "w07_ann_index",
@@ -850,6 +848,33 @@ object WriterQueries {
     * bound (ScaleStressSpec counts the touched rows via [[scd2State]]
     * — the hot path itself never forces an extra materialization).
     * Shared by st17 and its restart spec. */
+  /** orders' five change columns, the source of every SCD2 chain. */
+  private[graft] def scd2Orders(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
+      col("o_orderdate"), col("o_orderstatus"), col("o_totalprice"))
+
+  /** A chain's stored v0: the pre-[[Audit.Dq08Cutoff]] history,
+    * bucket-partitioned into `dim` (the CDC streams st17/st21/st25,
+    * their specs, and [[scd2ThreeVersions]]). */
+  private[graft] def scd2Seed(orders: org.apache.spark.sql.DataFrame,
+      dim: String): Unit =
+    scd2WriteVersion(scd2History(scd2Changes(
+      orders.filter(col("o_orderdate") < Audit.Dq08Cutoff))), dim, 0L)
+
+  /** The standard 3-version chain w10, w11 and dq08 build, with real
+    * manifests: v0 seeded, then one merge up to [[Audit.Dq08Horizon]]
+    * (v1) and one of the rest (v2). */
+  private[operators] def scd2ThreeVersions(s: org.apache.spark.sql.SparkSession,
+      d: String, dest: String): Unit = {
+    val orders = scd2Orders(s, d)
+    scd2Seed(orders, dest)
+    scd2MergeStep(dest, 0L, orders.filter(col("o_orderdate") >=
+      Audit.Dq08Cutoff && col("o_orderdate") < Audit.Dq08Horizon))
+    scd2MergeStep(dest, 1L,
+      orders.filter(col("o_orderdate") >= Audit.Dq08Horizon))
+  }
+
   def scd2MergeStep(dimDir: String, id: Long,
       batch: org.apache.spark.sql.DataFrame): Seq[Int] = {
     val s = batch.sparkSession
@@ -882,7 +907,7 @@ object WriterQueries {
       |FROM cur""".stripMargin) { (s, d) =>
     import s.implicits._
     val cutoff = "1997-01-01"
-    val dest = tmp(d, "scd2_dim")
+    val dest = s"${Writers.scratchDir("wq", d)}/scd2_dim"
     Writers.freshScratch(s, dest)
     val orders = Tables.orders(s, d)
     // 1) initial build: everything before the cutoff, stored
@@ -923,7 +948,7 @@ object WriterQueries {
       |  true AS maintenance_ok
       |FROM f""".stripMargin) { (s, d) =>
     import s.implicits._
-    val root = tmp(d, "opt_table")
+    val root = s"${Writers.scratchDir("wq", d)}/opt_table"
     Writers.freshScratch(s, root)
     val docs = Tables.documents(s, d).select($"doc_id", $"lang", $"text")
     val frag = substring(md5($"lang"), 1, 1) < "8"
@@ -1000,18 +1025,9 @@ object WriterQueries {
         "w08 oracle no longer has exactly one orders scan — revisit w10")
       o.replace(marker, "FROM orders WHERE o_orderdate < '1997-07-01'")
     }) { (s, d) =>
-    import s.implicits._
-    val dest = tmp(d, "scd2_tt")
+    val dest = s"${Writers.scratchDir("wq", d)}/scd2_tt"
     Writers.freshScratch(s, dest)
-    val cutoff = "1997-01-01"; val horizon = "1997-07-01"
-    val orders = Tables.orders(s, d)
-      .select($"o_orderkey", $"o_custkey", $"o_orderdate",
-        $"o_orderstatus", $"o_totalprice")
-    scd2WriteVersion(scd2History(
-      scd2Changes(orders.filter($"o_orderdate" < cutoff))), dest, 0L)
-    scd2MergeStep(dest, 0L, orders.filter(
-      $"o_orderdate" >= cutoff && $"o_orderdate" < horizon))
-    scd2MergeStep(dest, 1L, orders.filter($"o_orderdate" >= horizon))
+    scd2ThreeVersions(s, d, dest)
     // the time-travel read: state AS OF v1, with v2 present on disk
     scd2State(s, dest, 1L)
   }
@@ -1045,17 +1061,9 @@ object WriterQueries {
          |$o)""".stripMargin
     }) { (s, d) =>
     import s.implicits._
-    val dest = tmp(d, "scd2_vac")
+    val dest = s"${Writers.scratchDir("wq", d)}/scd2_vac"
     Writers.freshScratch(s, dest)
-    val cutoff = "1997-01-01"; val horizon = "1997-07-01"
-    val orders = Tables.orders(s, d)
-      .select($"o_orderkey", $"o_custkey", $"o_orderdate",
-        $"o_orderstatus", $"o_totalprice")
-    scd2WriteVersion(scd2History(
-      scd2Changes(orders.filter($"o_orderdate" < cutoff))), dest, 0L)
-    scd2MergeStep(dest, 0L, orders.filter(
-      $"o_orderdate" >= cutoff && $"o_orderdate" < horizon))
-    scd2MergeStep(dest, 1L, orders.filter($"o_orderdate" >= horizon))
+    scd2ThreeVersions(s, d, dest)
     val preV1 = scd2State(s, dest, 1L).localCheckpoint()
     val preLatest = scd2State(s, dest, 2L).localCheckpoint()
     val expired = scd2Vacuum(s, dest, keepFrom = 1L)
@@ -1103,7 +1111,8 @@ object WriterQueries {
     * scratch convention (annIndexDir's precedent; the spec and st20
     * deliberately build their OWN index dirs to stay independent of
     * w12's run order). */
-  def lexIndexDir(d: String): String = tmp(d, "lex_index")
+  def lexIndexDir(d: String): String =
+    s"${Writers.scratchDir("wq", d)}/lex_index"
 
   /** w12: the PERSISTED df-capped lexical inverted index — w06/w07's
     * index lifecycle applied to the hybrid retrieval stack's keyword
@@ -1152,7 +1161,8 @@ object WriterQueries {
     * for fixture `d` — [[lexIndexDir]]'s convention for the layout
     * revision, kept separate so w12's v1 artifact and w13's v2
     * artifact can coexist in one run. */
-  def lexIndexV2Dir(d: String): String = tmp(d, "lex_index_v2")
+  def lexIndexV2Dir(d: String): String =
+    s"${Writers.scratchDir("wq", d)}/lex_index_v2"
 
   /** w13: the PERSISTED V2 lexical index — w12's write/append/serve
     * cycle on the g-hash-bucketed layout (round-17 verdict ask #1):
@@ -1222,8 +1232,8 @@ object WriterQueries {
   val w14LexCompact: Q = Q(
     "w14_lex_compact", Similarity.s12Bm25Lexical.oracle.get) { (s, d) =>
     import s.implicits._
-    val src = tmp(d, "lex_compact_src")
-    val dest = tmp(d, "lex_compact_dst")
+    val src = s"${Writers.scratchDir("wq", d)}/lex_compact_src"
+    val dest = s"${Writers.scratchDir("wq", d)}/lex_compact_dst"
     Writers.freshScratch(s, src)
     Writers.freshScratch(s, dest)
     val postings = Similarity.lexIndex(Tables.documents(s, d))._1
@@ -1267,8 +1277,8 @@ object WriterQueries {
       |  true AS serve_equals_inline, true AS files_reduced"""
       .stripMargin) { (s, d) =>
     import s.implicits._
-    val src = tmp(d, "ivf_compact_src")
-    val dest = tmp(d, "ivf_compact_dst")
+    val src = s"${Writers.scratchDir("wq", d)}/ivf_compact_src"
+    val dest = s"${Writers.scratchDir("wq", d)}/ivf_compact_dst"
     Writers.freshScratch(s, src)
     Writers.freshScratch(s, dest)
     val emb = Tables.embeddings(s, d)

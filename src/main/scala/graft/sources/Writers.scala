@@ -20,14 +20,13 @@ import org.apache.spark.sql.functions._
   */
 object Writers {
 
-  /** Recursive delete for local scratch/sink directories — the ONE
-    * copy (writer queries, streaming twins, and specs all clear
-    * per-fixture scratch paths with it). */
-  def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty)
-      .foreach(rmrf)
-    f.delete(); ()
-  }
+  /** The per-fixture scratch directory of the query or artifact `tag`:
+    * `<JVM temp dir>/graft_<tag>_<d with non-alphanumerics as _>` —
+    * the one place the formula lives, so every builder's scratch path
+    * is derived identically from its fixture dir. */
+  def scratchDir(tag: String, d: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
+      d.replaceAll("[^A-Za-z0-9]", "_")
 
   /** Scheme-agnostic scratch-tree reset for the streaming harness
     * cycles (the round-11 review's last `java.io.File` holdout): delete
@@ -82,24 +81,35 @@ object Writers {
       .repartition(targetFiles)
       .write.mode(SaveMode.Overwrite).parquet(dest)
 
-  /** Run two INDEPENDENT Spark actions concurrently (guide §2.6 —
-    * actions are only sequential because driver code calls them
-    * sequentially; a second in-flight job back-fills executors freed
-    * by the first one's tail). Used by the index writers whose two
-    * legs (postings+sizes, centroids+lists) target DISTINCT
-    * directories and share no uncheckpointed side effects: at fixture
-    * scale each leg is a short driver-sequential job and the pair's
-    * wall is max instead of sum; on a cluster two jobs in flight is
-    * the guide's recommended back-fill depth. Exceptions from either
-    * leg propagate (the off-thread one is re-thrown after join). */
-  private[graft] def inParallel(a: => Unit, b: => Unit): Unit = {
-    @volatile var err: Throwable = null
-    val t = new Thread(() => try b catch { case e: Throwable => err = e })
-    t.setName("graft-writer-leg")
+  /** Run `leg` (a chain of Spark actions) in flight on a NEW thread
+    * while `body` runs on the caller's, handing `body` the leg's join
+    * (guide §2.6 — actions are only sequential because driver code
+    * calls them sequentially; a second in-flight job back-fills the
+    * executors freed by the first one's tail, turning two independent
+    * chains' wall from sum into max; two jobs in flight is the guide's
+    * recommended back-fill depth). A new thread rather than a pooled
+    * executor: a thread inherits the creating thread's Spark local
+    * properties and active session at construction, so the leg's jobs
+    * carry the caller's job group and description, which a reused
+    * pool worker would not pick up. The join rethrows the leg's
+    * failure, and the leg never outlives the call: if `body` fails,
+    * the leg is joined before the failure propagates, and a leg that
+    * `body` never joined is joined (and its failure rethrown) on the
+    * way out. */
+  private[graft] def inFlight[A, B](leg: => A)(body: (() => A) => B): B = {
+    @volatile var out: Either[Throwable, A] = null
+    val t = new Thread(() =>
+      out = try Right(leg) catch { case e: Throwable => Left(e) })
+    t.setName("graft-leg")
     t.setDaemon(true)
     t.start()
-    try a finally t.join()
-    if (err != null) throw err
+    def join(): A = {
+      t.join()
+      out.fold(e => throw e, identity)
+    }
+    val r = try body(join _) catch { case e: Throwable => t.join(); throw e }
+    join()
+    r
   }
 
   /** The Hadoop filesystem owning `path` — every maintenance op's
@@ -165,9 +175,9 @@ object Writers {
     * round-10 review found st16 re-implementing this dance inline. */
   def writeIvfIndex(centroids: DataFrame, lists: DataFrame,
       dest: String): Unit = {
-    inParallel(
-      centroids.write.parquet(s"$dest/centroids"),
-      appendIvfLists(lists, dest, SaveMode.ErrorIfExists))
+    inFlight(appendIvfLists(lists, dest, SaveMode.ErrorIfExists)) { _ =>
+      centroids.write.parquet(s"$dest/centroids")
+    }
   }
 
   /** The two list layouts — flat `lists/c_id=` ([[appendIvfLists]])
@@ -241,10 +251,11 @@ object Writers {
     * the frozen cap is the d12/w06 admission shape. */
   def writeLexIndex(postings: DataFrame, sizes: DataFrame, dest: String,
       mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
-    inParallel(
-      postings.select("g", "doc_id").sortWithinPartitions("g")
-        .write.mode(mode).parquet(s"$dest/postings"),
-      sizes.select("doc_id", "n").write.mode(mode).parquet(s"$dest/sizes"))
+    inFlight(
+        sizes.select("doc_id", "n").write.mode(mode).parquet(s"$dest/sizes")) {
+      _ => postings.select("g", "doc_id").sortWithinPartitions("g")
+        .write.mode(mode).parquet(s"$dest/postings")
+    }
   }
 
   /** Read the stored lexical index back in the probe-side shapes
@@ -369,13 +380,14 @@ object Writers {
     lexLayoutOf(s, dest).foreach(b => require(b == buckets,
       s"$dest is stamped buckets=$b; appending with buckets=$buckets " +
         "would scatter shingles across buckets and break pruning/df"))
-    inParallel(
-      postings.select(col("g"), col("doc_id"),
+    inFlight(
+        sizes.select("doc_id", "n").write.mode(mode).parquet(s"$dest/sizes")) {
+      _ => postings.select(col("g"), col("doc_id"),
           pmod(hash(col("g")), lit(buckets)).as("gb"))
         .repartition(buckets, col("gb"))
         .sortWithinPartitions("gb", "g")
-        .write.mode(mode).partitionBy("gb").parquet(s"$dest/postings"),
-      sizes.select("doc_id", "n").write.mode(mode).parquet(s"$dest/sizes"))
+        .write.mode(mode).partitionBy("gb").parquet(s"$dest/postings")
+    }
     stampLexLayout(s, dest, buckets)
   }
 
@@ -408,14 +420,14 @@ object Writers {
           "would scatter shingles across buckets and break pruning/df")
       case None => stampLexLayout(s, dest, buckets)
     }
-    inParallel(
-      postings.select(col("g"), col("doc_id"),
+    inFlight(sizes.select("doc_id", "n")
+        .write.mode(SaveMode.Overwrite).parquet(s"$dest/sizes/leg=$leg")) {
+      _ => postings.select(col("g"), col("doc_id"),
           pmod(hash(col("g")), lit(buckets)).as("gb"))
         .sortWithinPartitions("gb", "g")
         .write.mode(SaveMode.Overwrite).partitionBy("gb")
-        .parquet(s"$dest/postings/leg=$leg"),
-      sizes.select("doc_id", "n")
-        .write.mode(SaveMode.Overwrite).parquet(s"$dest/sizes/leg=$leg"))
+        .parquet(s"$dest/postings/leg=$leg")
+    }
   }
 
   /** Read a v2 index PRUNED to the named buckets — the partition
@@ -544,7 +556,14 @@ object Writers {
     val szRouted = sizes.columns.contains("insz")
     // distinct dirs, independent chains off the caller's checkpointed
     // batch — overlapped like every other index writer (guide §2.6)
-    inParallel({
+    inFlight {
+      val sw = sizes
+        .select((if (szRouted) Seq("doc_id", "n", "insz")
+                 else Seq("doc_id", "n")).map(sizes.col): _*)
+        .write.mode(SaveMode.Overwrite)
+      (if (szRouted) sw.partitionBy("insz") else sw)
+        .parquet(s"$dest/sizes/leg=$leg")
+    } { _ =>
       val w = postings
         .select((if (routed) Seq("g", "doc_id", "inqg")
                  else Seq("g", "doc_id")).map(postings.col): _*)
@@ -552,14 +571,7 @@ object Writers {
         .write.mode(SaveMode.Overwrite)
       (if (routed) w.partitionBy("inqg") else w)
         .parquet(s"$dest/postings/leg=$leg")
-    }, {
-      val sw = sizes
-        .select((if (szRouted) Seq("doc_id", "n", "insz")
-                 else Seq("doc_id", "n")).map(sizes.col): _*)
-        .write.mode(SaveMode.Overwrite)
-      (if (szRouted) sw.partitionBy("insz") else sw)
-        .parquet(s"$dest/sizes/leg=$leg")
-    })
+    }
   }
 
   /** Read a ROUTED lexical index ([[writeLexIndexLeg]] with `inqg`/

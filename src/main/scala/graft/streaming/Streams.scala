@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Row type for typed stateful processing over the events table. */
 final case class Event(event_id: Long, ts: java.sql.Timestamp,
@@ -690,6 +692,122 @@ object Streams {
         .add("__batch_id", org.apache.spark.sql.types.LongType))
       .parquet(dest)
       .drop("__batch_id")
+
+  /** The stream starter every file-source query goes through — the
+    * st12–st28 builders and their restart specs alike, so a spec
+    * drives the same wiring the builder ships: a parquet file source
+    * at `src` read with `schema` (a file source needs the explicit
+    * schema and an existing `src` dir), optionally reshaped by
+    * `transform` (the st12–st14 funnels), checkpointed at `ckpt`, with
+    * `step` run on every micro-batch through foreachBatch. */
+  def startStream(s: SparkSession, src: String, schema: StructType,
+      ckpt: String, transform: DataFrame => DataFrame = identity,
+      trigger: Trigger = Trigger.ProcessingTime(0L),
+      outputMode: String = "append")(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    transform(s.readStream.schema(schema).parquet(src))
+      .writeStream.outputMode(outputMode)
+      .option("checkpointLocation", ckpt)
+      .trigger(trigger)
+      .foreachBatch(step)
+      .start()
+
+  /** The chunk feeder of the long-running sites (st12–st24): ONE query,
+    * started by `query`, stays up while each chunk is appended to
+    * `src` and drained with processAllAvailable, so every chunk has
+    * been fully processed before the next one is written. One query
+    * start-up for the whole run, but the running trigger loop may split
+    * a multi-file chunk across micro-batches (see [[auditGate]] for the
+    * sites that cannot take that). */
+  def feedChunks(src: String, chunks: Seq[DataFrame])(
+      query: => StreamingQuery): Unit = {
+    val q = query
+    try chunks.foreach { c =>
+      c.write.mode("append").parquet(src)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** The per-commit audit gate (st25–st28): an artifact is seeded,
+    * every streamed chunk is admitted by `admit` as exactly one
+    * micro-batch, and right after each commit `audit(batchId)` runs the
+    * artifact's integrity checks (rows of check_name, n_violations).
+    * Returns one row per (phase, check):
+    *   - stream_max: the MAX violations any per-commit audit saw —
+    *     all zeros pins that the engine's own commit protocol never
+    *     trips its own fsck. Aggregating by MAX keeps the row
+    *     independent of how many commits saw a check;
+    *   - post_corruption: after the stream stops, `corrupt` damages
+    *     the artifact (or moves the corpus on without a reindex) and
+    *     returns the same audit's checks, whose counts the oracle
+    *     recomputes by set algebra.
+    *
+    * Batch structure: one Trigger.AvailableNow run per chunk, written
+    * strictly BEFORE that run starts and continuing the checkpoint
+    * (batch ids carry on across runs), so chunk k is exactly batch k.
+    * A continuously running query races its trigger loop against the
+    * multi-file chunk write and can split one chunk across two
+    * micro-batches (observed at sf1, where the write window is wide).
+    * The gates cannot take that: their corruption steps name fixed
+    * versions (st25's chain must end at v3, one merge per chunk), and
+    * `audit` names the admitted-so-far slice by batch id. So the batch
+    * ids are `require`d to be 0, 1, … one per chunk, failing loudly
+    * rather than auditing an artifact shaped differently than the
+    * oracle's algebra assumes. foreachBatch runs sequentially on the
+    * driver, so the running max is a plain map.
+    *
+    * 100 TB: the per-commit bill is the audit's (dq06/dq07/dq08's); in
+    * production a gate runs on the retention cadence (st21) rather
+    * than every batch — here every batch runs it because the per-commit
+    * shape is the point. */
+  def auditGate[S](s: SparkSession, base: String, schema: StructType,
+      chunks: Seq[DataFrame])(seed: => S)(
+      admit: (S, DataFrame, Long) => Unit,
+      audit: Long => DataFrame,
+      corrupt: S => DataFrame): DataFrame = {
+    import s.implicits._
+    graft.sources.Writers.freshScratch(s, base, "src")
+    val src = s"$base/src"; val ckpt = s"$base/ckpt"
+    val seeded = seed
+    val streamMax = scala.collection.mutable.Map.empty[String, Long]
+      .withDefaultValue(0L)
+    val seenIds = scala.collection.mutable.ArrayBuffer.empty[Long]
+    chunks.foreach { c =>
+      c.write.mode("append").parquet(src)
+      val q = startStream(s, src, schema, ckpt,
+          trigger = Trigger.AvailableNow()) { (b, id) =>
+        admit(seeded, b, id)
+        seenIds += id
+        audit(id).collect().foreach { r =>
+          val (k, n) = (r.getString(0), r.getLong(1))
+          streamMax(k) = math.max(streamMax(k), n)
+        }
+      }
+      try q.awaitTermination() finally q.stop()
+    }
+    require(seenIds.toSeq == chunks.indices.map(_.toLong),
+      s"$base expects batch ids ${chunks.indices.mkString(",")}, one per " +
+        s"chunk, saw ${seenIds.mkString(",")} — the micro-batch " +
+        "structure drifted from the gate's algebra")
+    val post = corrupt(seeded)
+      .select(lit("post_corruption").as("phase"), $"check_name",
+        $"n_violations")
+    streamMax.keys.toSeq.sorted
+      .map(k => ("stream_max", k, streamMax(k)))
+      .toDF("phase", "check_name", "n_violations")
+      .unionByName(post)
+  }
+
+  /** [[readSink]] restricted to the LAST batch's rows: the answer of a
+    * sink whose earlier batches are deliberately partial (st22/st23). */
+  def readLastBatch(s: SparkSession, dest: String,
+      rowSchema: StructType): DataFrame = {
+    val sunk = s.read.schema(rowSchema
+        .add("__batch_id", org.apache.spark.sql.types.LongType))
+      .parquet(dest)
+    val lastId = sunk.agg(max(col("__batch_id"))).head.getLong(0)
+    sunk.filter(col("__batch_id") === lastId).drop("__batch_id")
+  }
 
   /** [[readSink]] fixed to [[FunnelMatch]] rows (st12/st13). */
   def readMatchesSink(s: org.apache.spark.sql.SparkSession,

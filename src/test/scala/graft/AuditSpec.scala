@@ -33,7 +33,7 @@ class AuditSpec extends AnyFunSuite {
     import s.implicits._
     val sq = operators.StreamingQueries
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_st26_probe"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val idx = s"$base/index"
     val docs = sources.Tables.documents(spark, sf)
     val vocab = sq.lexFreezeVocab(spark, docs, base)
@@ -50,7 +50,7 @@ class AuditSpec extends AnyFunSuite {
     assert(healthy.values.forall(_ == 0L),
       s"healthy two-leg chain audited non-zero: $healthy")
     // the crash: leg 0's sizes never landed
-    sources.Writers.rmrf(new java.io.File(s"$idx/sizes/leg=0"))
+    sources.Writers.freshScratch(spark, s"$idx/sizes/leg=0")
     val fired = gate()
     assert(fired("missing_docs") > 0L,
       s"gate did not fire on the half-landed commit: $fired")
@@ -72,7 +72,7 @@ class AuditSpec extends AnyFunSuite {
     import s.implicits._
     val sq = operators.StreamingQueries
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_st27_probe"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val idx = s"$base/index"
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
@@ -89,7 +89,7 @@ class AuditSpec extends AnyFunSuite {
     assert(healthy.values.forall(_ == 0L),
       s"healthy two-leg index audited non-zero: $healthy")
     // the crash: leg 0's lists never landed
-    sources.Writers.rmrf(new java.io.File(s"$idx/lists/leg=0"))
+    sources.Writers.freshScratch(spark, s"$idx/lists/leg=0")
     val fired = gate()
     assert(fired("missing_vecs") > 0L,
       s"gate did not fire on the vanished leg: $fired")
@@ -116,7 +116,7 @@ class AuditSpec extends AnyFunSuite {
     import s.implicits._
     val sq = operators.StreamingQueries
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_st28_probe"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val idx = s"$base/index"
     val B = 16
     val docs = sources.Tables.documents(spark, sf)
@@ -422,7 +422,7 @@ class AuditSpec extends AnyFunSuite {
         $"nrm".as("c_nrm"))
     val idx = java.nio.file.Files
       .createTempDirectory("graft_dq07clean").toString
-    sources.Writers.rmrf(new java.io.File(idx))
+    sources.Writers.freshScratch(spark, idx)
     sources.Writers.writeIvfIndex(cents,
       operators.Similarity.ivfAssignment(emb, cents), idx)
     val (rc, rl) = sources.Writers.readIvfIndex(spark, idx)
@@ -449,7 +449,7 @@ class AuditSpec extends AnyFunSuite {
     import spark.implicits._
     val dest = java.nio.file.Files
       .createTempDirectory("graft_dq08clean").toString
-    sources.Writers.rmrf(new java.io.File(dest))
+    sources.Writers.freshScratch(spark, dest)
     val cutoff = "1997-01-01"; val horizon = "1997-07-01"
     val orders = sources.Tables.orders(spark, sf)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",

@@ -20,7 +20,7 @@ class CompactionSpec extends AnyFunSuite {
     import s.implicits._
     val sq = operators.StreamingQueries
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_compact_lex"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val src = s"$base/src"; val dest = s"$base/dst"
     val B = 16
     val docs = sources.Tables.documents(spark, sf)
@@ -61,7 +61,7 @@ class CompactionSpec extends AnyFunSuite {
     import s.implicits._
     val sim = operators.Similarity
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_compact_ivf"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val src = s"$base/src"; val dest = s"$base/dst"
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding", sim.norm($"embedding").as("nrm"))
@@ -97,7 +97,7 @@ class CompactionSpec extends AnyFunSuite {
     import s.implicits._
     val sq = operators.StreamingQueries
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_compact_routed"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val idx = s"$base/index"
     val docs = sources.Tables.documents(spark, sf)
     val vocab = sq.lexFreezeVocab(spark, docs, base)
@@ -121,7 +121,7 @@ class CompactionSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_v2_mix"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val p = Seq(("a b c", 1L), ("b c d", 2L)).toDF("g", "doc_id")
     val sz = Seq((1L, 1L), (2L, 1L)).toDF("doc_id", "n")
     // flat tree, then a leg into it
@@ -152,8 +152,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("a non-index dir is refused before any read") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_compact_none"
-    sources.Writers.rmrf(new java.io.File(base))
-    new java.io.File(base).mkdirs()
+    sources.Writers.freshScratch(spark, base)
     val e = intercept[IllegalArgumentException] {
       sources.Writers.compactIndex(spark, base, s"$base/dst")
     }

@@ -561,7 +561,7 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dest = s"${System.getProperty("java.io.tmpdir")}/graft_d12idx_test"
-    graft.sources.Writers.rmrf(new java.io.File(dest))
+    graft.sources.Writers.freshScratch(spark, dest)
     val corpus = operators.Dedup.d12Corpus(spark, sf)
     operators.Dedup.writeNearDupIndex(
       corpus.filter($"doc_id" % 4 === 0), dest, "overwrite")

@@ -331,4 +331,50 @@ class MiscSpec extends AnyFunSuite {
       s"stale-listing fallback diverged: $viaFallback vs $viaFresh")
     assert(viaFallback.nonEmpty)
   }
+
+  test("inFlight: the leg sees the caller's local properties, a leg " +
+      "failure rethrows at the join, a caller failure waits for the leg") {
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.test.prop", "caller")
+    try {
+      val seen = sources.Writers.inFlight {
+        spark.range(10).count()
+        sc.getLocalProperty("graft.test.prop")
+      }(join => join())
+      assert(seen == "caller")
+    } finally sc.setLocalProperty("graft.test.prop", null)
+
+    val legErr = intercept[IllegalStateException] {
+      sources.Writers.inFlight[Unit, Int](
+        throw new IllegalStateException("leg"))(_ => 1)
+    }
+    assert(legErr.getMessage == "leg")
+
+    @volatile var legDone = false
+    val callerErr = intercept[IllegalArgumentException] {
+      sources.Writers.inFlight { Thread.sleep(300); legDone = true } { _ =>
+        throw new IllegalArgumentException("caller")
+      }
+    }
+    assert(callerErr.getMessage == "caller")
+    assert(legDone, "the caller's failure propagated before the leg ended")
+  }
+
+  test("withConf restores a previously set key and unsets an unset one") {
+    val setKey = "spark.graft.test.withConfSet"
+    val unsetKey = "spark.graft.test.withConfUnset"
+    spark.conf.set(setKey, "before")
+    try {
+      intercept[RuntimeException] {
+        GraftSession.withConf(spark, setKey -> "inside",
+            unsetKey -> "inside") {
+          assert(spark.conf.get(setKey) == "inside")
+          assert(spark.conf.get(unsetKey) == "inside")
+          throw new RuntimeException("body")
+        }
+      }
+      assert(spark.conf.get(setKey) == "before")
+      assert(spark.conf.getOption(unsetKey).isEmpty)
+    } finally spark.conf.unset(setKey)
+  }
 }

@@ -719,9 +719,9 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft_memo_fp").toString
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
     sources.Tables.embeddings(spark, sf).filter($"vec_id" % 4 === 0)
-      .write.parquet(dir)
+      .write.mode("overwrite").parquet(dir)
     def reg(): Unit =
       spark.read.parquet(dir).createOrReplaceTempView("emb_fp_v")
     reg()
@@ -761,7 +761,7 @@ class PlanSpec extends AnyFunSuite {
     assert(plans.TvfViewCounts.misses - m0 == 4,
       "a same-name in-place rewrite (mtime change) under a re-taken " +
         "listing must re-count — the fingerprint mixes mtime now")
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
   }
 
   test("knn_serve with an explicit query view READ-PRUNES the stored " +
@@ -787,7 +787,7 @@ class PlanSpec extends AnyFunSuite {
         $"nrm".as("c_nrm"))
     val dir = java.nio.file.Files
       .createTempDirectory("graft_dpp_serve").toString
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
     sources.Writers.writeIvfIndex(cents,
       operators.Similarity.ivfAssignment(emb, cents), dir)
     sources.Tables.embeddings(spark, sf)
@@ -829,7 +829,7 @@ class PlanSpec extends AnyFunSuite {
       s"lists scan read $partsRead partitions for $nQueries queries at " +
         s"nprobe=2 (cells: $nCells) — the dynamic-pruning filter did " +
         "not bite at execution")
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
   }
 
   test("bm25_serve on a V2 index READ-PRUNES the stored posting " +
@@ -845,7 +845,7 @@ class PlanSpec extends AnyFunSuite {
     val (p, sz) = operators.Similarity.lexIndex(docs)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_v2_prune").toString
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
     val buckets = 64
     sources.Writers.writeLexIndexV2(p, sz, dir, buckets)
     // a SHORT query (first 10 tokens of a real doc, so its shingles
@@ -891,7 +891,7 @@ class PlanSpec extends AnyFunSuite {
     // tree reads at most 2x the shingle bound, never the whole set
     val legDir = java.nio.file.Files
       .createTempDirectory("graft_v2leg_prune").toString
-    sources.Writers.rmrf(new java.io.File(legDir))
+    sources.Writers.freshScratch(spark, legDir)
     // NB: `lit` here is the escaped query-text String above, so the
     // usual count(lit(1)) idiom would resolve to String.apply — count
     // the non-null g column instead
@@ -921,7 +921,7 @@ class PlanSpec extends AnyFunSuite {
       s"legged postings scan read $partsRead leaf partitions for a " +
         s"$nShingles-shingle query over 2 legs — the bucket filter " +
         "did not prune across leg dirs")
-    sources.Writers.rmrf(new java.io.File(dir))
-    sources.Writers.rmrf(new java.io.File(legDir))
+    sources.Writers.freshScratch(spark, dir)
+    sources.Writers.freshScratch(spark, legDir)
   }
 }

@@ -215,13 +215,13 @@ class ScaleStressSpec extends AnyFunSuite
   }
 
   /** The 10×-inflated fixture dir, built once per JVM — a FIXED path
-    * cleared on entry (the st*-twin rmrf pattern): the previous
+    * cleared on entry (the st*-twin freshScratch pattern): the previous
     * createTempDirectory leaked one full fixture copy per test JVM
     * (round-6 verdict hygiene #4). */
   private lazy val dir: String = {
     import spark.implicits._
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_stress_fixture"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val docs = sources.Tables.documents(spark, sf)
     (0 until Copies).map { c =>
       val t =
@@ -690,7 +690,7 @@ class ScaleStressSpec extends AnyFunSuite
     val dir01 = "/root/testdata/sf0.1"
     val dimDir =
       s"${System.getProperty("java.io.tmpdir")}/graft_stress_scd2"
-    sources.Writers.rmrf(new java.io.File(dimDir))
+    sources.Writers.freshScratch(spark, dimDir)
     val cutoff = "1997-01-01"
     val orders = sources.Tables.orders(spark, dir01)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",
@@ -745,7 +745,7 @@ class ScaleStressSpec extends AnyFunSuite
     val dir01 = "/root/testdata/sf0.1"
     val dimDir =
       s"${System.getProperty("java.io.tmpdir")}/graft_stress_manifest"
-    sources.Writers.rmrf(new java.io.File(dimDir))
+    sources.Writers.freshScratch(spark, dimDir)
     val cutoff = "1997-01-01"
     val orders = sources.Tables.orders(spark, dir01)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",
@@ -816,7 +816,7 @@ class ScaleStressSpec extends AnyFunSuite
     val dir001 = "/root/testdata/sf0.01"
     val dimDir =
       s"${System.getProperty("java.io.tmpdir")}/graft_stress_manifest100"
-    sources.Writers.rmrf(new java.io.File(dimDir))
+    sources.Writers.freshScratch(spark, dimDir)
     val cutoff = "1997-01-01"
     val orders = sources.Tables.orders(spark, dir001)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",
@@ -913,7 +913,7 @@ class ScaleStressSpec extends AnyFunSuite
       }
     val dimDir = s"${System.getProperty("java.io.tmpdir")}" +
       "/graft_stress_manifest100_sf10"
-    sources.Writers.rmrf(new java.io.File(dimDir))
+    sources.Writers.freshScratch(spark, dimDir)
     val cutoff = "1997-01-01"
     // The okStep copies share (custkey, orderdate) — SCD2's change
     // extractor (latest per (cust, date)) collapses all 100 copies to
@@ -1019,7 +1019,7 @@ class ScaleStressSpec extends AnyFunSuite
     val nDocs = docs.count()
     assert(nDocs >= 50000L, s"sf1 docs fixture too small: $nDocs")
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_stress_lex100"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val idx = s"$base/index"
     // ONE reindex: frozen vocabulary + frozen probe-reachable g-set
     val vocab = sq.lexFreezeVocab(spark, docs, base)
@@ -1112,7 +1112,7 @@ class ScaleStressSpec extends AnyFunSuite
     val nDocs = docs.count()
     assert(nDocs >= 50000L, s"sf1 docs fixture too small: $nDocs")
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_stress_lexv2"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val idx = s"$base/index"
     val B = 4096
     val postings = operators.Similarity.lexIndex(docs)._1.localCheckpoint()
@@ -1182,7 +1182,7 @@ class ScaleStressSpec extends AnyFunSuite
     record("lexv2_serve_partition_fraction", partFraction, 0.0)
     record("lexv2_serve_row_fraction", rowFraction, 0.0)
     record("lexv2_serve_parity", if (parity) 1.0 else 0.0, 1.0)
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
   }
 
   test("v2 admission chain COMPACTED at sf1: the file count collapses " +
@@ -1213,7 +1213,7 @@ class ScaleStressSpec extends AnyFunSuite
     assert(nDocs >= 50000L, s"sf1 docs fixture too small: $nDocs")
     val base =
       s"${System.getProperty("java.io.tmpdir")}/graft_stress_lexv2c"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val src = s"$base/src"; val dest = s"$base/dst"
     val B = 64
     val Legs = 20
@@ -1251,7 +1251,7 @@ class ScaleStressSpec extends AnyFunSuite
     assert(parity, "compacted serve diverged from the legged serve at sf1")
     record("lexv2_compact_file_ratio", fileRatio, 0.0)
     record("lexv2_compact_serve_parity", if (parity) 1.0 else 0.0, 1.0)
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
   }
 
   test("100-leg IVF admission chain AT sf1: replay-idempotent, probed-" +
@@ -1291,7 +1291,7 @@ class ScaleStressSpec extends AnyFunSuite
     val nVecs = emb.count()
     assert(nVecs >= 20000L, s"sf1 embeddings fixture too small: $nVecs")
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_stress_ivf100"
-    sources.Writers.rmrf(new java.io.File(base))
+    sources.Writers.freshScratch(spark, base)
     val idx = s"$base/index"
     // ONE reindex: frozen sampled quantizer, persisted under the index
     val cents = emb
@@ -1688,38 +1688,33 @@ class ScaleStressSpec extends AnyFunSuite
       : Seq[org.apache.spark.sql.Row] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[streaming.Event]
-    val q = pipe(mem.toDS()).writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_sstress").toString)
-      .start()
-    try {
-      streamChunks.foreach { chunk =>
-        mem.addData(chunk.sortBy(e => (e.event_id * 0x9e3779b9L) & 0xffffffffL))
+    GraftSession.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming" +
+            ".state.RocksDBStateStoreProvider")) {
+      val mem = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[streaming.Event]
+      val q = pipe(mem.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_sstress").toString)
+        .start()
+      try {
+        streamChunks.foreach { chunk =>
+          mem.addData(chunk.sortBy(e => (e.event_id * 0x9e3779b9L) & 0xffffffffL))
+          q.processAllAvailable()
+        }
+        val maxMs = streamChunks.last.map(e => usecOf(e.ts)).max / 1000L
+        mem.addData(Seq(streaming.Event(-1L,
+          new java.sql.Timestamp(maxMs + 36L * 3600 * 1000), -1L,
+          "__sentinel", 0.0, "{}")))
         q.processAllAvailable()
-      }
-      val maxMs = streamChunks.last.map(e => usecOf(e.ts)).max / 1000L
-      mem.addData(Seq(streaming.Event(-1L,
-        new java.sql.Timestamp(maxMs + 36L * 3600 * 1000), -1L,
-        "__sentinel", 0.0, "{}")))
-      q.processAllAvailable()
-      mem.addData(Seq(streaming.Event(-2L,
-        new java.sql.Timestamp(maxMs + 36L * 3600 * 1000 + 60000L), -1L,
-        "__sentinel", 0.0, "{}")))
-      q.processAllAvailable()
-      spark.table(name).collect().toSeq
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        mem.addData(Seq(streaming.Event(-2L,
+          new java.sql.Timestamp(maxMs + 36L * 3600 * 1000 + 60000L), -1L,
+          "__sentinel", 0.0, "{}")))
+        q.processAllAvailable()
+        spark.table(name).collect().toSeq
+      } finally q.stop()
     }
   }
 

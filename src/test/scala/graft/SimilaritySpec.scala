@@ -352,7 +352,7 @@ class SimilaritySpec extends AnyFunSuite {
     // round-10 lesson: equality alone is vacuous (stored == inline by
     // design), engagement needs the negative probe.
     val dest = s"${System.getProperty("java.io.tmpdir")}/graft_s11idx_test"
-    graft.sources.Writers.rmrf(new java.io.File(dest))
+    graft.sources.Writers.freshScratch(spark, dest)
     val (postings, sizes) = operators.Similarity.lexIndex(
       sources.Tables.documents(spark, sf))
     graft.sources.Writers.writeLexIndex(postings, sizes, dest)
@@ -400,7 +400,7 @@ class SimilaritySpec extends AnyFunSuite {
     // so the same w12 artifact serves Jaccard, RRF, and BM25. Written
     // then read back through the real layout — row-identical.
     val dest = s"${System.getProperty("java.io.tmpdir")}/graft_s12idx_test"
-    graft.sources.Writers.rmrf(new java.io.File(dest))
+    graft.sources.Writers.freshScratch(spark, dest)
     val (postings, sizes) = operators.Similarity.lexIndex(
       sources.Tables.documents(spark, sf))
     graft.sources.Writers.writeLexIndex(postings, sizes, dest)

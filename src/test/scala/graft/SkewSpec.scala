@@ -98,15 +98,12 @@ class SkewSpec extends AnyFunSuite {
     // Thresholds lowered so test-sized data trips the same machinery
     // that handles real skew at 100 TB: one hot key holding 75% of the
     // left side must make OptimizeSkewedJoin split its partition.
-    val confs = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32k",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val left = spark.range(0, 200000).select(
         when($"id" < 150000, 0L).otherwise($"id").as("k"),
         lpad($"id".cast("string"), 64, "x").as("pad"))
@@ -119,9 +116,6 @@ class SkewSpec extends AnyFunSuite {
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"OptimizeSkewedJoin did not split the hot partition:\n$plan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

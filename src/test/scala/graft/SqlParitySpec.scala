@@ -690,7 +690,7 @@ class SqlParitySpec extends AnyFunSuite {
     import spark.implicits._
     val lexDir = java.nio.file.Files
       .createTempDirectory("graft_tvf_lexserve").toString
-    sources.Writers.rmrf(new java.io.File(lexDir))
+    sources.Writers.freshScratch(spark, lexDir)
     val (p, sz) = operators.Similarity
       .lexIndex(sources.Tables.documents(spark, sf))
     sources.Writers.writeLexIndex(p, sz, lexDir)
@@ -699,7 +699,7 @@ class SqlParitySpec extends AnyFunSuite {
       canon(spark.sql("SELECT * FROM bm25_topk('documents')")))
     val ivfDir = java.nio.file.Files
       .createTempDirectory("graft_tvf_ivfserve").toString
-    sources.Writers.rmrf(new java.io.File(ivfDir))
+    sources.Writers.freshScratch(spark, ivfDir)
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
         operators.Similarity.norm($"embedding").as("nrm"))
@@ -783,7 +783,7 @@ class SqlParitySpec extends AnyFunSuite {
     // the serve twin takes the same form, against a stored index
     val dir = java.nio.file.Files
       .createTempDirectory("graft_tvf_freeserve").toString
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
     val (p, sz) = operators.Similarity
       .lexIndex(sources.Tables.documents(spark, sf))
     sources.Writers.writeLexIndex(p, sz, dir)
@@ -817,7 +817,7 @@ class SqlParitySpec extends AnyFunSuite {
       .createTempDirectory("graft_tvf_lexv1").toString
     val v2Dir = java.nio.file.Files
       .createTempDirectory("graft_tvf_lexv2").toString
-    Seq(v1Dir, v2Dir).foreach(d => sources.Writers.rmrf(new java.io.File(d)))
+    Seq(v1Dir, v2Dir).foreach(d => sources.Writers.freshScratch(spark, d))
     sources.Writers.writeLexIndex(p, sz, v1Dir)
     // two v2 legs under one frozen B — the w13 admission cycle
     sources.Writers.writeLexIndexV2(p.filter($"doc_id" % 2 === 0),
@@ -867,7 +867,7 @@ class SqlParitySpec extends AnyFunSuite {
         org.apache.spark.sql.SaveMode.Append)
     }
     assert(ex.getMessage.contains("buckets"))
-    Seq(v1Dir, v2Dir).foreach(d => sources.Writers.rmrf(new java.io.File(d)))
+    Seq(v1Dir, v2Dir).foreach(d => sources.Writers.freshScratch(spark, d))
   }
 
   test("v2 ADMISSION legs: a legged v2 index serves identically to " +
@@ -888,7 +888,7 @@ class SqlParitySpec extends AnyFunSuite {
     val szc = sz.localCheckpoint()
     val dir = java.nio.file.Files
       .createTempDirectory("graft_tvf_lexv2leg").toString
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
     val B = 32
     (0 until 3).foreach { k =>
       sources.Writers.writeLexIndexV2Leg(pc.filter($"doc_id" % 3 === k),
@@ -924,7 +924,7 @@ class SqlParitySpec extends AnyFunSuite {
       sources.Writers.writeLexIndexV2Leg(pc, szc, dir, "bad", B * 2)
     }
     assert(ex.getMessage.contains("buckets"))
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
   }
 
   test("hybrid_serve TVF: stored-artifact fusion == inline " +
@@ -941,7 +941,7 @@ class SqlParitySpec extends AnyFunSuite {
     val ivfDir = java.nio.file.Files
       .createTempDirectory("graft_tvf_hybivf").toString
     Seq(lexDir, ivfDir).foreach(d =>
-      sources.Writers.rmrf(new java.io.File(d)))
+      sources.Writers.freshScratch(spark, d))
     val (p, sz) = operators.Similarity
       .lexIndex(sources.Tables.documents(spark, sf))
     sources.Writers.writeLexIndex(p, sz, lexDir)
@@ -968,7 +968,7 @@ class SqlParitySpec extends AnyFunSuite {
     // hybrid_serve is layout-agnostic on its lexical leg
     val v2Dir = java.nio.file.Files
       .createTempDirectory("graft_tvf_hyblex2").toString
-    sources.Writers.rmrf(new java.io.File(v2Dir))
+    sources.Writers.freshScratch(spark, v2Dir)
     sources.Writers.writeLexIndexV2(p, sz, v2Dir, buckets = 16)
     assert(canon(spark.sql(
         s"SELECT * FROM hybrid_serve('$v2Dir', '$ivfDir', 'embeddings')")) ==
@@ -979,7 +979,7 @@ class SqlParitySpec extends AnyFunSuite {
           "'embeddings')").collect()
     }
     Seq(lexDir, ivfDir, v2Dir).foreach(d =>
-      sources.Writers.rmrf(new java.io.File(d)))
+      sources.Writers.freshScratch(spark, d))
   }
 
   test("index_fsck on a V2 index: misbucketed_postings appended, " +
@@ -995,7 +995,7 @@ class SqlParitySpec extends AnyFunSuite {
     val (p, sz) = operators.Similarity.lexIndex(docs)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_fsck_v2").toString
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
     sources.Writers.writeLexIndexV2(p, sz, dir, buckets = 16)
     def checksOf(q: String): Map[String, Long] =
       spark.sql(q).collect()
@@ -1022,7 +1022,7 @@ class SqlParitySpec extends AnyFunSuite {
       s"SELECT * FROM index_fsck('$dir', 'fsck_v2_docs')")
     assert(dirty("misbucketed_postings") > 0L,
       "a posting file moved across buckets did not fire the check")
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
   }
 
   test("degenerate query inputs return EMPTY results, never throw: " +
@@ -1037,7 +1037,7 @@ class SqlParitySpec extends AnyFunSuite {
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft_tvf_edge_idx").toString
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
         operators.Similarity.norm($"embedding").as("nrm"))
@@ -1055,7 +1055,7 @@ class SqlParitySpec extends AnyFunSuite {
     assert(spark.sql(
       "SELECT * FROM bm25_topk('documents', query => 'ab')")
       .collect().isEmpty)
-    sources.Writers.rmrf(new java.io.File(dir))
+    sources.Writers.freshScratch(spark, dir)
   }
 
   test("graft_refresh TVF: reports eviction state per memo") {
@@ -1085,7 +1085,7 @@ class SqlParitySpec extends AnyFunSuite {
     import spark.implicits._
     val dest = java.nio.file.Files
       .createTempDirectory("graft_tvf_fsck").toString
-    sources.Writers.rmrf(new java.io.File(dest))
+    sources.Writers.freshScratch(spark, dest)
     val cutoff = "1997-01-01"
     val orders = sources.Tables.orders(spark, sf)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",
@@ -1130,7 +1130,7 @@ class SqlParitySpec extends AnyFunSuite {
     docs.filter($"doc_id" % 2 === 0).createOrReplaceTempView("fsck_snap_docs")
     val lexDir = java.nio.file.Files
       .createTempDirectory("graft_idxfsck_lex").toString
-    sources.Writers.rmrf(new java.io.File(lexDir))
+    sources.Writers.freshScratch(spark, lexDir)
     val (p, sz) = operators.Similarity
       .lexIndex(spark.table("fsck_snap_docs"))
     sources.Writers.writeLexIndex(p, sz, lexDir)
@@ -1169,7 +1169,7 @@ class SqlParitySpec extends AnyFunSuite {
     assert(cents.count() > 0, "degenerate test fixture: no centroids")
     val ivfDir = java.nio.file.Files
       .createTempDirectory("graft_idxfsck_ivf").toString
-    sources.Writers.rmrf(new java.io.File(ivfDir))
+    sources.Writers.freshScratch(spark, ivfDir)
     sources.Writers.writeIvfIndex(cents,
       operators.Similarity.ivfAssignment(snap, cents), ivfDir)
     val kclean = checksOf(s"SELECT * FROM index_fsck('$ivfDir', 'fsck_snap_emb')")

@@ -47,6 +47,14 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** Run `body` on the RocksDB state store provider (transformWithState
+    * requires it), restoring the session's previous provider after. */
+  private def withRocksDb[T](body: => T): T =
+    GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming" +
+          ".state.RocksDBStateStoreProvider"))(body)
+
   private def canon(rows: Seq[org.apache.spark.sql.Row]): Set[String] =
     rows.map(_.toSeq.map(String.valueOf).mkString("|")).toSet
 
@@ -229,73 +237,57 @@ class StreamingSpec extends AnyFunSuite {
   test("transformWithState running totals equal the batch aggregate") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
     // the transformWithState operator requires the RocksDB provider
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[streaming.Event]
-    val q = streaming.Streams.userTotalsTws(mem.toDS())
-      .writeStream.format("memory").queryName("tws_out")
-      .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_tws").toString)
-      .start()
-    try {
-      val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
-        e.user_id, e.event_type, e.value, e.props))
-      evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
-        mem.addData(chunk)
-        q.processAllAvailable()
-      }
-      val finalState = spark.table("tws_out").collect()
-        .groupBy(_.getLong(0))
-        .map { case (uid, rows) => uid -> rows.maxBy(_.getLong(1)) }
-      val batch = sources.Tables.events(spark, sf)
-        .groupBy($"user_id")
-        .agg(count(lit(1)).as("n"), sum($"value").as("t"))
-        .collect().map(r => r.getLong(0) -> r).toMap
-      assert(finalState.keySet == batch.keySet)
-      finalState.foreach { case (uid, row) =>
-        assert(row.getLong(1) == batch(uid).getLong(1))
-        assert(math.abs(row.getDouble(2) - batch(uid).getDouble(2)) < 1e-6)
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val mem = MemoryStream[streaming.Event]
+      val q = streaming.Streams.userTotalsTws(mem.toDS())
+        .writeStream.format("memory").queryName("tws_out")
+        .outputMode("update")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_tws").toString)
+        .start()
+      try {
+        val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
+          e.user_id, e.event_type, e.value, e.props))
+        evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
+          mem.addData(chunk)
+          q.processAllAvailable()
+        }
+        val finalState = spark.table("tws_out").collect()
+          .groupBy(_.getLong(0))
+          .map { case (uid, rows) => uid -> rows.maxBy(_.getLong(1)) }
+        val batch = sources.Tables.events(spark, sf)
+          .groupBy($"user_id")
+          .agg(count(lit(1)).as("n"), sum($"value").as("t"))
+          .collect().map(r => r.getLong(0) -> r).toMap
+        assert(finalState.keySet == batch.keySet)
+        finalState.foreach { case (uid, row) =>
+          assert(row.getLong(1) == batch(uid).getLong(1))
+          assert(math.abs(row.getDouble(2) - batch(uid).getDouble(2)) < 1e-6)
+        }
+      } finally q.stop()
     }
   }
 
   test("session windows run on the RocksDB state store provider") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[Ev]
-    val q = streaming.Streams.sessionize(mem.toDF())
-      .writeStream.format("memory").queryName("rocksdb_out")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
-      .start()
-    try {
-      val evs = batchEvents.take(200)
-      mem.addData(evs)
-      q.processAllAvailable()
-      mem.addData(Seq(sentinel))
-      q.processAllAvailable()
-      assert(spark.table("rocksdb_out").count() > 0)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val mem = MemoryStream[Ev]
+      val q = streaming.Streams.sessionize(mem.toDF())
+        .writeStream.format("memory").queryName("rocksdb_out")
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+        .start()
+      try {
+        val evs = batchEvents.take(200)
+        mem.addData(evs)
+        q.processAllAvailable()
+        mem.addData(Seq(sentinel))
+        q.processAllAvailable()
+        assert(spark.table("rocksdb_out").count() > 0)
+      } finally q.stop()
     }
   }
 
@@ -426,22 +418,15 @@ class StreamingSpec extends AnyFunSuite {
     val chunks = batchEvents.grouped(
       math.max(1, batchEvents.size / 2)).toSeq
 
-    def startQuery() = {
-      val src = spark.readStream.schema(schema).parquet(srcDir)
-      streaming.Streams.tumblingCounts(src)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          streaming.Streams.upsertWindowTotals(b, dest)
-        }
-        .start()
-    }
+    def startQuery() =
+      streaming.Streams.startStream(spark, srcDir, schema, ckpt,
+          transform = streaming.Streams.tumblingCounts,
+          outputMode = "update") {
+        (b, _) => streaming.Streams.upsertWindowTotals(b, dest)
+      }
 
-    val q1 = startQuery()
-    try {
-      chunks.head.toDF().write.mode("append").parquet(srcDir)
-      q1.processAllAvailable()
-    } finally q1.stop()
+    streaming.Streams.feedChunks(srcDir, Seq(chunks.head.toDF()))(
+      startQuery())
 
     // restart from the checkpoint with the rest of the data landed
     chunks(1).toDF().write.mode("append").parquet(srcDir)
@@ -469,11 +454,6 @@ class StreamingSpec extends AnyFunSuite {
     // DIFFERENT batch partition, which the idempotent sink cannot
     // collapse — only the ledger prevents it).
     import spark.implicits._
-    import org.apache.spark.sql.Dataset
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
     val srcDir = java.nio.file.Files.createTempDirectory("graft_qsrc").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_qckpt").toString
     val dest = java.nio.file.Files.createTempDirectory("graft_qdest").toString
@@ -482,27 +462,16 @@ class StreamingSpec extends AnyFunSuite {
     val chunks = batchEvents.grouped(
       math.max(1, batchEvents.size / 3)).toSeq
 
-    def startQuery() = {
-      val src = spark.readStream.schema(schema).parquet(srcDir)
-        .as[streaming.Event]
-      streaming.Streams.quantFunnelMatchesTws(src, tokens)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (b: Dataset[streaming.FunnelMatch], id: Long) =>
-            streaming.Streams.sinkMatchesIdempotent(b, id, dest)
-        }
-        .start()
-    }
+    def startQuery() =
+      streaming.Streams.startStream(spark, srcDir, schema, ckpt,
+          transform = in => streaming.Streams.quantFunnelMatchesTws(
+            in.as[streaming.Event], tokens).toDF()) {
+        (b, id) => streaming.Streams.sinkMatchesIdempotent(b, id, dest)
+      }
 
-    try {
-      val q1 = startQuery()
-      try {
-        chunks.head.toDF().write.mode("append").parquet(srcDir)
-        q1.processAllAvailable()
-        chunks(1).toDF().write.mode("append").parquet(srcDir)
-        q1.processAllAvailable()
-      } finally q1.stop()
+    withRocksDb {
+      streaming.Streams.feedChunks(srcDir,
+        Seq(chunks.head.toDF(), chunks(1).toDF()))(startQuery())
 
       chunks.drop(2).foreach(c =>
         c.toDF().write.mode("append").parquet(srcDir))
@@ -529,11 +498,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(got.toSet == want,
         s"restarted funnel diverges: extra=${got.toSet -- want}, " +
           s"missing=${want -- got.toSet}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -544,13 +508,11 @@ class StreamingSpec extends AnyFunSuite {
     // — d12's core verbatim per batch, stateless across batches, so
     // any chunking must land on the batch operator's exact output
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     val docs = sources.Tables.documents(spark, sf)
-    val corpus = operators.Dedup.d12Corpus(spark, sf)
-    val cBands = operators.Dedup.corpusBandIndex(corpus).localCheckpoint()
-    val cSh = corpus.select($"doc_id".as("corpus_id"),
-      operators.Dedup.shingles(operators.Dedup.toks($"text")).as("sh_c"))
-      .localCheckpoint()
+    val sq = operators.StreamingQueries
+    // the builder's own statics and per-batch step
+    val (cBands, cSh) = sq.nearDupGateStatics(
+      operators.Dedup.d12Corpus(spark, sf))
     val batchDocs = docs.filter($"doc_id" % 2 === 1)
       .select($"doc_id", $"text")
       .unionAll(docs.filter($"doc_id" % 10 === 0)
@@ -559,27 +521,13 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val srcDir = java.nio.file.Files.createTempDirectory("graft_ndsrc").toString
     val dest = java.nio.file.Files.createTempDirectory("graft_nddest").toString
-    val q = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(srcDir)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ndckpt").toString)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        graft.streaming.Streams.sinkMatchesIdempotent(
-          operators.Dedup.nearDupAgainstCorpus(b, cBands, cSh), id, dest)
-      }
-      .start()
-    try {
-      batchDocs.grouped(math.max(1, batchDocs.size / 3)).foreach { c =>
-        c.toDF("doc_id", "text").write.mode("append").parquet(srcDir)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    streaming.Streams.feedChunks(srcDir,
+        batchDocs.grouped(math.max(1, batchDocs.size / 3)).toSeq
+          .map(_.toDF("doc_id", "text"))) {
+      streaming.Streams.startStream(spark, srcDir, sq.DocSchema,
+        java.nio.file.Files.createTempDirectory("graft_ndckpt").toString)(
+        sq.nearDupGateStep(cBands, cSh, dest))
+    }
     val got = graft.streaming.Streams.readSink(spark, dest,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id",
@@ -613,39 +561,23 @@ class StreamingSpec extends AnyFunSuite {
     // after chunk 1, deliver chunks 2-3 while down, restart from the
     // checkpoint, compare to d12's batch answer with a duplicate check.
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
-    val corpus = operators.Dedup.d12Corpus(spark, sf)
-    val cBands = operators.Dedup.corpusBandIndex(corpus).localCheckpoint()
-    val cSh = corpus.select($"doc_id".as("corpus_id"),
-      operators.Dedup.shingles(operators.Dedup.toks($"text")).as("sh_c"))
-      .localCheckpoint()
+    val sq = operators.StreamingQueries
+    // the builder's own statics and per-batch step
+    val (cBands, cSh) = sq.nearDupGateStatics(
+      operators.Dedup.d12Corpus(spark, sf))
     val batch = operators.Dedup.d12Batch(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val chunks = batch.grouped(math.max(1, batch.size / 3)).toSeq
     val srcDir = java.nio.file.Files.createTempDirectory("graft_ndrsrc").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ndrckpt").toString
     val dest = java.nio.file.Files.createTempDirectory("graft_ndrdest").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
 
     def startQuery() =
-      spark.readStream.schema(schema).parquet(srcDir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.streaming.Streams.sinkMatchesIdempotent(
-            operators.Dedup.nearDupAgainstCorpus(b, cBands, cSh), id, dest)
-        }
-        .start()
+      streaming.Streams.startStream(spark, srcDir, sq.DocSchema, ckpt)(
+        sq.nearDupGateStep(cBands, cSh, dest))
 
-    val q1 = startQuery()
-    try {
-      chunks.head.toDF("doc_id", "text").write.mode("append").parquet(srcDir)
-      q1.processAllAvailable()
-    } finally q1.stop()
+    streaming.Streams.feedChunks(srcDir,
+      Seq(chunks.head.toDF("doc_id", "text")))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
     chunks.drop(1).foreach(c =>
       c.toDF("doc_id", "text").write.mode("append").parquet(srcDir))
@@ -684,7 +616,6 @@ class StreamingSpec extends AnyFunSuite {
     // chunk 1, deliver chunks 2-3 down, restart, compare to the batch
     // s04 answer with a duplicate check.
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
         operators.Similarity.norm($"embedding").as("nrm"))
@@ -708,27 +639,11 @@ class StreamingSpec extends AnyFunSuite {
           org.apache.spark.sql.types.FloatType))))
 
     def startQuery() =
-      spark.readStream.schema(srcSchema).parquet(srcDir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val bs = b.sparkSession
-          import bs.implicits._
-          val qs = b.select($"vec_id".as("q_id"),
-            $"embedding".as("q_vec"),
-            operators.Similarity.norm($"embedding").as("q_nrm"))
-          graft.streaming.Streams.sinkMatchesIdempotent(
-            operators.Similarity.ivfProbeQueries(qs, cents, assigned,
-              nprobe = 2), id, dest)
-        }
-        .start()
+      streaming.Streams.startStream(spark, srcDir, srcSchema, ckpt)(
+        operators.StreamingQueries.st16Serve.step(cents, assigned, dest))
 
-    val q1 = startQuery()
-    try {
-      chunks.head.toDF("vec_id", "embedding")
-        .write.mode("append").parquet(srcDir)
-      q1.processAllAvailable()
-    } finally q1.stop()
+    streaming.Streams.feedChunks(srcDir,
+      Seq(chunks.head.toDF("vec_id", "embedding")))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
     chunks.drop(1).foreach(c =>
       c.toDF("vec_id", "embedding").write.mode("append").parquet(srcDir))
@@ -771,7 +686,6 @@ class StreamingSpec extends AnyFunSuite {
     // after chunk 1, deliver chunks 2-3 down, restart, compare the
     // union to the batch s12 answer with a duplicate check.
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
       IntegerType}
     val idx = java.nio.file.Files.createTempDirectory("graft_bm25idx").toString
@@ -786,32 +700,19 @@ class StreamingSpec extends AnyFunSuite {
     val sz0 = p0.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     graft.sources.Writers.writeLexIndex(p0, sz0, s"$idx/lex")
     val (pr, szr) = graft.sources.Writers.readLexIndex(spark, s"$idx/lex")
-    val postings = pr.localCheckpoint()
-    val sizes = szr.localCheckpoint()
+    val statics = operators.StreamingQueries.bm25ServeStatics(pr, szr)
+    val postings = statics._1
     val chunks = postings.select($"doc_id").distinct()
       .filter($"doc_id" % 50 === 0).collect().map(_.getLong(0)).sorted
       .grouped(math.max(1,
         postings.select($"doc_id").distinct()
           .filter($"doc_id" % 50 === 0).count().toInt / 3 + 1)).toSeq
     def startQuery() =
-      spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType))))
-        .parquet(srcDir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val qsh = postings.join(b.select(col("doc_id")), "doc_id")
-            .select(col("doc_id").as("q_id"), col("g"))
-          graft.streaming.Streams.sinkMatchesIdempotent(
-            operators.Similarity.bm25Queries(qsh, postings, sizes),
-            id, dest)
-        }
-        .start()
-    val q1 = startQuery()
-    try {
-      chunks.head.toSeq.toDF("doc_id").write.mode("append").parquet(srcDir)
-      q1.processAllAvailable()
-    } finally q1.stop()
+      streaming.Streams.startStream(spark, srcDir,
+          StructType(Seq(StructField("doc_id", LongType))), ckpt)(
+        operators.StreamingQueries.bm25ServeStep(statics, dest))
+    streaming.Streams.feedChunks(srcDir,
+      Seq(chunks.head.toSeq.toDF("doc_id")))(startQuery())
     // later chunks arrive while the query is DOWN
     chunks.drop(1).foreach(c =>
       c.toSeq.toDF("doc_id").write.mode("append").parquet(srcDir))
@@ -840,7 +741,6 @@ class StreamingSpec extends AnyFunSuite {
     // Kill after chunk 1, deliver chunks 2-3 down, restart, compare to
     // the batch s10 answer with a duplicate check.
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
         operators.Similarity.norm($"embedding").as("nrm"), $"label")
@@ -866,28 +766,11 @@ class StreamingSpec extends AnyFunSuite {
         org.apache.spark.sql.types.IntegerType)))
 
     def startQuery() =
-      spark.readStream.schema(srcSchema).parquet(srcDir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val bs = b.sparkSession
-          import bs.implicits._
-          val qs = b.select($"vec_id".as("q_id"),
-            $"embedding".as("q_vec"),
-            operators.Similarity.norm($"embedding").as("q_nrm"),
-            $"label".as("q_label"))
-          graft.streaming.Streams.sinkMatchesIdempotent(
-            operators.Similarity.filteredTopK(qs, cents, assigned,
-              nprobe = 4, k = 3), id, dest)
-        }
-        .start()
+      streaming.Streams.startStream(spark, srcDir, srcSchema, ckpt)(
+        operators.StreamingQueries.st19Serve.step(cents, assigned, dest))
 
-    val q1 = startQuery()
-    try {
-      chunks.head.toDF("vec_id", "embedding", "label")
-        .write.mode("append").parquet(srcDir)
-      q1.processAllAvailable()
-    } finally q1.stop()
+    streaming.Streams.feedChunks(srcDir,
+      Seq(chunks.head.toDF("vec_id", "embedding", "label")))(startQuery())
     chunks.drop(1).foreach(c =>
       c.toDF("vec_id", "embedding", "label")
         .write.mode("append").parquet(srcDir))
@@ -929,7 +812,6 @@ class StreamingSpec extends AnyFunSuite {
     // state outside the checkpoint). Kill after chunk 1, deliver
     // chunks 2-3 down, restart, compare to the batch s11 answer.
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
         operators.Similarity.norm($"embedding").as("nrm"))
@@ -965,35 +847,12 @@ class StreamingSpec extends AnyFunSuite {
           org.apache.spark.sql.types.FloatType))))
 
     def startQuery() =
-      spark.readStream.schema(srcSchema).parquet(srcDir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val bs = b.sparkSession
-          import bs.implicits._
-          val qs = b.select($"vec_id".as("q_id"),
-            $"embedding".as("q_vec"),
-            operators.Similarity.norm($"embedding").as("q_nrm"))
-          val vec5 = operators.Similarity
-            .ivfProbeQueries(qs, cents, assigned, nprobe = 2)
-            .select($"q_id", $"vec_id".as("doc_id"), $"rk".as("vrk"))
-          val qsh = postings
-            .join(qs.select($"q_id"),
-              postings("doc_id") === org.apache.spark.sql.functions.col("q_id"))
-            .select($"q_id", $"g")
-          graft.streaming.Streams.sinkMatchesIdempotent(
-            operators.Similarity.rrfFuse(
-              operators.Similarity.lexTopKQueries(qsh, postings, sizes),
-              vec5), id, dest)
-        }
-        .start()
+      streaming.Streams.startStream(spark, srcDir, srcSchema, ckpt)(
+        operators.StreamingQueries.st20Serve(() => (postings, sizes))
+          .step(cents, assigned, dest))
 
-    val q1 = startQuery()
-    try {
-      chunks.head.toDF("vec_id", "embedding")
-        .write.mode("append").parquet(srcDir)
-      q1.processAllAvailable()
-    } finally q1.stop()
+    streaming.Streams.feedChunks(srcDir,
+      Seq(chunks.head.toDF("vec_id", "embedding")))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
     chunks.drop(1).foreach(c =>
       c.toDF("vec_id", "embedding").write.mode("append").parquet(srcDir))
@@ -1034,36 +893,22 @@ class StreamingSpec extends AnyFunSuite {
     // kill after chunk 1, deliver chunks 2-3 while down, restart — the
     // version-keyed merge must land on the same bytes.
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.types.{StructType, StructField, LongType,
-      StringType}
     val base = java.nio.file.Files
       .createTempDirectory("graft_st18rs").toString
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val state = s"$base/sketch"
-    new java.io.File(src).mkdirs()
+    sources.Writers.freshScratch(spark, base, "src")
     operators.StreamingQueries.writeCms(spark,
       org.apache.spark.util.sketch.CountMinSketch.create(0.001, 0.99, 42),
       s"$state/v0")
     val docs = sources.Tables.documents(spark, sf)
       .select($"doc_id", $"text")
     def startQuery() =
-      spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          operators.StreamingQueries.cmsMergeStep(state, id, b)
-        }
-        .start()
-    val q1 = startQuery()
-    try {
-      docs.filter(pmod($"doc_id", lit(3)) === 0)
-        .write.mode("append").parquet(src)
-      q1.processAllAvailable()
-    } finally q1.stop()
+      streaming.Streams.startStream(spark, src,
+          operators.StreamingQueries.DocSchema, ckpt)(
+        operators.StreamingQueries.cmsMergeStep(state))
+    streaming.Streams.feedChunks(src,
+      Seq(docs.filter(pmod($"doc_id", lit(3)) === 0)))(startQuery())
     docs.filter(pmod($"doc_id", lit(3)) === 1)
       .write.mode("append").parquet(src)
     docs.filter(pmod($"doc_id", lit(3)) === 2)
@@ -1094,49 +939,25 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
       StringType, DoubleType, TimestampType, BooleanType}
+    val sq = operators.StreamingQueries
     val base = java.nio.file.Files
       .createTempDirectory("graft_st17rs").toString
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dim = s"$base/dim"
-    new java.io.File(src).mkdirs()
-    val cutoff = "1997-01-01"
-    val orders = sources.Tables.orders(spark, sf)
-      .select($"o_orderkey", $"o_custkey", $"o_orderdate",
-        $"o_orderstatus", $"o_totalprice")
-    operators.WriterQueries.scd2WriteVersion(
-      operators.WriterQueries.scd2History(
-        operators.WriterQueries.scd2Changes(
-          orders.filter($"o_orderdate" < cutoff))),
-      dim, 0L)
-    val srcSchema = StructType(Seq(StructField("o_orderkey", LongType),
-      StructField("o_custkey", LongType),
-      StructField("o_orderdate", TimestampType),
-      StructField("o_orderstatus", StringType),
-      StructField("o_totalprice", DoubleType)))
+    sources.Writers.freshScratch(spark, base, "src")
+    // the builder's own seed, chunks and per-batch step
+    val orders = operators.WriterQueries.scd2Orders(spark, sf)
+    operators.WriterQueries.scd2Seed(orders, dim)
+    val chunks = sq.cdcChunks(orders)
 
     def startQuery() =
-      spark.readStream.schema(srcSchema).parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          operators.WriterQueries.scd2MergeStep(dim, id, b); ()
-        }
-        .start()
+      streaming.Streams.startStream(spark, src, sq.CdcStreamSchema, ckpt) {
+        (b, id) => operators.WriterQueries.scd2MergeStep(dim, id, b); ()
+      }
 
-    val bounds = Seq(("1997-01-01", "1997-07-01"),
-      ("1997-07-01", "1998-01-01"), ("1998-01-01", "2999-01-01"))
-    val q1 = startQuery()
-    try {
-      val (lo, hi) = bounds.head
-      orders.filter($"o_orderdate" >= lo && $"o_orderdate" < hi)
-        .write.mode("append").parquet(src)
-      q1.processAllAvailable()
-    } finally q1.stop()
+    streaming.Streams.feedChunks(src, chunks.take(1))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
-    bounds.drop(1).foreach { case (lo, hi) =>
-      orders.filter($"o_orderdate" >= lo && $"o_orderdate" < hi)
-        .write.mode("append").parquet(src)
-    }
+    chunks.drop(1).foreach(_.write.mode("append").parquet(src))
     val q2 = startQuery()
     try q2.processAllAvailable() finally q2.stop()
 
@@ -1180,54 +1001,25 @@ class StreamingSpec extends AnyFunSuite {
     // from-scratch rebuild after versions were physically expired.
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.types.{StructType, StructField, LongType,
-      StringType, DoubleType, TimestampType, BooleanType}
+    val sq = operators.StreamingQueries
     val base = java.nio.file.Files
       .createTempDirectory("graft_st21rs").toString
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dim = s"$base/dim"
-    new java.io.File(src).mkdirs()
-    val cutoff = "1997-01-01"
-    val orders = sources.Tables.orders(spark, sf)
-      .select($"o_orderkey", $"o_custkey", $"o_orderdate",
-        $"o_orderstatus", $"o_totalprice")
-    operators.WriterQueries.scd2WriteVersion(
-      operators.WriterQueries.scd2History(
-        operators.WriterQueries.scd2Changes(
-          orders.filter($"o_orderdate" < cutoff))),
-      dim, 0L)
-    val srcSchema = StructType(Seq(StructField("o_orderkey", LongType),
-      StructField("o_custkey", LongType),
-      StructField("o_orderdate", TimestampType),
-      StructField("o_orderstatus", StringType),
-      StructField("o_totalprice", DoubleType)))
+    sources.Writers.freshScratch(spark, base, "src")
+    // the builder's own seed, chunks and per-batch step (merge plus
+    // the retention cadence)
+    val orders = operators.WriterQueries.scd2Orders(spark, sf)
+    operators.WriterQueries.scd2Seed(orders, dim)
+    val chunks = sq.cdcChunks(orders)
 
     def startQuery() =
-      spark.readStream.schema(srcSchema).parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          operators.WriterQueries.scd2MergeStep(dim, id, b)
-          if (id % operators.StreamingQueries.RetentionEvery == 1L) {
-            operators.WriterQueries.scd2Vacuum(b.sparkSession, dim, id); ()
-          }
-        }
-        .start()
+      streaming.Streams.startStream(spark, src, sq.CdcStreamSchema, ckpt)(
+        sq.cdcRetentionStep(dim))
 
-    val bounds = Seq(("1997-01-01", "1997-07-01"),
-      ("1997-07-01", "1998-01-01"), ("1998-01-01", "2999-01-01"))
-    val q1 = startQuery()
-    try {
-      val (lo, hi) = bounds.head
-      orders.filter($"o_orderdate" >= lo && $"o_orderdate" < hi)
-        .write.mode("append").parquet(src)
-      q1.processAllAvailable()
-    } finally q1.stop()
+    streaming.Streams.feedChunks(src, chunks.take(1))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
-    bounds.drop(1).foreach { case (lo, hi) =>
-      orders.filter($"o_orderdate" >= lo && $"o_orderdate" < hi)
-        .write.mode("append").parquet(src)
-    }
+    chunks.drop(1).foreach(_.write.mode("append").parquet(src))
     val q2 = startQuery()
     try q2.processAllAvailable() finally q2.stop()
 
@@ -1273,15 +1065,14 @@ class StreamingSpec extends AnyFunSuite {
     // proof the per-batch serves read the evolving STORED index rather
     // than any full-corpus inline state.
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
-      StringType, DoubleType, IntegerType}
+      DoubleType, IntegerType}
     val sq = operators.StreamingQueries
     val base = java.nio.file.Files
       .createTempDirectory("graft_st22rs").toString
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dest = s"$base/dest"; val idx = s"$base/index"
-    new java.io.File(src).mkdirs()
+    sources.Writers.freshScratch(spark, base, "src")
     val docs = sources.Tables.documents(spark, sf)
     // the SAME shared stages the registered query ships (lexFreezeVocab
     // / lexAdmit / s11Vec5 / lexServeStored) — not a hand-kept copy
@@ -1290,24 +1081,11 @@ class StreamingSpec extends AnyFunSuite {
     sq.lexAdmit(vocab, qg, docs.filter($"doc_id" % 3 === 0), idx, "base")
     val vec5 = sq.s11Vec5(spark, sf)
     def startQuery() =
-      spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          sq.lexAdmit(vocab, qg, b, idx, id.toString)
-          graft.streaming.Streams.sinkMatchesIdempotent(
-            sq.lexServeStored(b.sparkSession, idx, vec5), id, dest)
-        }
-        .start()
-    val q1 = startQuery()
-    try {
-      docs.filter($"doc_id" % 3 === 1).select($"doc_id", $"text")
-        .write.mode("append").parquet(src)
-      q1.processAllAvailable()
-    } finally q1.stop()
+      streaming.Streams.startStream(spark, src, sq.DocSchema, ckpt)(
+        sq.lexAdmissionStep(vocab, qg, idx, vec5, dest))
+    streaming.Streams.feedChunks(src,
+      Seq(docs.filter($"doc_id" % 3 === 1).select($"doc_id", $"text")))(
+      startQuery())
     // the second chunk arrives while the query is DOWN
     docs.filter($"doc_id" % 3 === 2).select($"doc_id", $"text")
       .write.mode("append").parquet(src)
@@ -1392,15 +1170,14 @@ class StreamingSpec extends AnyFunSuite {
     // serve (one admission in) must DIFFER from the final one — proof
     // the per-batch serves read the evolving STORED index.
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
-      DoubleType, IntegerType, FloatType, ArrayType}
+      DoubleType, IntegerType}
     val sq = operators.StreamingQueries
     val base = java.nio.file.Files
       .createTempDirectory("graft_st23rs").toString
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dest = s"$base/dest"; val idx = s"$base/index"
-    new java.io.File(src).mkdirs()
+    sources.Writers.freshScratch(spark, base, "src")
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
         operators.Similarity.norm($"embedding").as("nrm"))
@@ -1413,25 +1190,11 @@ class StreamingSpec extends AnyFunSuite {
         $"nrm".as("q_nrm")).localCheckpoint()
     val probedCells = operators.Similarity.probeCellsOf(qsCk, cents, 2)
     def startQuery() =
-      spark.readStream
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          sq.ivfAdmit(cents, b, idx, id.toString)
-          graft.streaming.Streams.sinkMatchesIdempotent(
-            sq.ivfServeStored(b.sparkSession, idx, emb, cents, qsCk,
-              probedCells), id, dest)
-        }
-        .start()
-    val q1 = startQuery()
-    try {
-      emb.filter($"vec_id" % 3 === 1).select($"vec_id", $"embedding")
-        .write.mode("append").parquet(src)
-      q1.processAllAvailable()
-    } finally q1.stop()
+      streaming.Streams.startStream(spark, src, sq.VecSchema, ckpt)(
+        sq.ivfAdmissionStep(cents, idx, emb, qsCk, probedCells, dest))
+    streaming.Streams.feedChunks(src,
+      Seq(emb.filter($"vec_id" % 3 === 1).select($"vec_id", $"embedding")))(
+      startQuery())
     // the second chunk arrives while the query is DOWN
     emb.filter($"vec_id" % 3 === 2).select($"vec_id", $"embedding")
       .write.mode("append").parquet(src)
@@ -1496,11 +1259,6 @@ class StreamingSpec extends AnyFunSuite {
     // boundary rows. Kill mid-stream, restart, land the rest, compare
     // to the batch asofJoin twin.
     import spark.implicits._
-    import org.apache.spark.sql.Dataset
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
     val srcDir = java.nio.file.Files.createTempDirectory("graft_asrc").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ackpt").toString
     val dest = java.nio.file.Files.createTempDirectory("graft_adest").toString
@@ -1508,27 +1266,16 @@ class StreamingSpec extends AnyFunSuite {
     val chunks = batchEvents.grouped(
       math.max(1, batchEvents.size / 3)).toSeq
 
-    def startQuery() = {
-      val src = spark.readStream.schema(schema).parquet(srcDir)
-        .as[streaming.Event]
-      streaming.Streams.asofEnrichTws(src, "view", "purchase")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (b: Dataset[streaming.AsofMatch], id: Long) =>
-            streaming.Streams.sinkMatchesIdempotent(b, id, dest)
-        }
-        .start()
-    }
+    def startQuery() =
+      streaming.Streams.startStream(spark, srcDir, schema, ckpt,
+          transform = in => streaming.Streams.asofEnrichTws(
+            in.as[streaming.Event], "view", "purchase").toDF()) {
+        (b, id) => streaming.Streams.sinkMatchesIdempotent(b, id, dest)
+      }
 
-    try {
-      val q1 = startQuery()
-      try {
-        chunks.head.toDF().write.mode("append").parquet(srcDir)
-        q1.processAllAvailable()
-        chunks(1).toDF().write.mode("append").parquet(srcDir)
-        q1.processAllAvailable()
-      } finally q1.stop()
+    withRocksDb {
+      streaming.Streams.feedChunks(srcDir,
+        Seq(chunks.head.toDF(), chunks(1).toDF()))(startQuery())
 
       chunks.drop(2).foreach(c =>
         c.toDF().write.mode("append").parquet(srcDir))
@@ -1565,165 +1312,136 @@ class StreamingSpec extends AnyFunSuite {
       assert(got.toSet == want,
         s"restarted as-of diverges: extra=${got.toSet -- want}, " +
           s"missing=${want -- got.toSet}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("transformWithState event-time timers close sessions == batch twin") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[streaming.Event]
-    val q = streaming.Streams.userSessionsTws(mem.toDS())
-      .writeStream.format("memory").queryName("tws_sessions")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_tws_timer").toString)
-      .start()
-    try {
-      val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
-        e.user_id, e.event_type, e.value, e.props))
-      evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
-        mem.addData(chunk)
+    withRocksDb {
+      val mem = MemoryStream[streaming.Event]
+      val q = streaming.Streams.userSessionsTws(mem.toDS())
+        .writeStream.format("memory").queryName("tws_sessions")
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_tws_timer").toString)
+        .start()
+      try {
+        val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
+          e.user_id, e.event_type, e.value, e.props))
+        evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
+          mem.addData(chunk)
+          q.processAllAvailable()
+        }
+        // Two sentinel batches: the first advances the watermark past
+        // every real close-timer, the second gives the engine a batch in
+        // which those timers actually FIRE (watermark lags one batch).
+        val s0 = sentinel
+        mem.addData(Seq(streaming.Event(-1L, s0.ts, -1L, "__sentinel",
+          0.0, "{}")))
         q.processAllAvailable()
-      }
-      // Two sentinel batches: the first advances the watermark past
-      // every real close-timer, the second gives the engine a batch in
-      // which those timers actually FIRE (watermark lags one batch).
-      val s0 = sentinel
-      mem.addData(Seq(streaming.Event(-1L, s0.ts, -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      mem.addData(Seq(streaming.Event(-2L,
-        new Timestamp(s0.ts.getTime + 60000), -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      val got = spark.table("tws_sessions").collect()
-        .filter(_.getLong(0) >= 0) // drop the sentinel user's session
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
-          r.getTimestamp(2).getTime, r.getLong(3))).toSet
-      val want = streaming.Streams
-        .sessionize(sources.Tables.events(spark, sf)).collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
-          r.getTimestamp(2).getTime, r.getLong(3))).toSet
-      assert(got.nonEmpty)
-      assert(got == want,
-        s"timer-closed sessions diverge: extra=${got -- want}, missing=${want -- got}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        mem.addData(Seq(streaming.Event(-2L,
+          new Timestamp(s0.ts.getTime + 60000), -1L, "__sentinel",
+          0.0, "{}")))
+        q.processAllAvailable()
+        val got = spark.table("tws_sessions").collect()
+          .filter(_.getLong(0) >= 0) // drop the sentinel user's session
+          .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
+            r.getTimestamp(2).getTime, r.getLong(3))).toSet
+        val want = streaming.Streams
+          .sessionize(sources.Tables.events(spark, sf)).collect()
+          .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
+            r.getTimestamp(2).getTime, r.getLong(3))).toSet
+        assert(got.nonEmpty)
+        assert(got == want,
+          s"timer-closed sessions diverge: extra=${got -- want}, missing=${want -- got}")
+      } finally q.stop()
     }
   }
 
   test("transformWithState MapState per-type counts equal the batch aggregate") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[streaming.Event]
-    val q = streaming.Streams.userTypeCountsTws(mem.toDS())
-      .writeStream.format("memory").queryName("type_counts_out")
-      .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_mapstate").toString)
-      .start()
-    try {
-      val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
-        e.user_id, e.event_type, e.value, e.props))
-      evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
-        mem.addData(chunk)
-        q.processAllAvailable()
-      }
-      val got = spark.table("type_counts_out").collect()
-        .groupBy(_.getLong(0))
-        .map { case (uid, rows) =>
-          uid -> rows.maxBy(_.getLong(2)).getString(1) }
-      val want = sources.Tables.events(spark, sf)
-        .groupBy($"user_id", $"event_type").count().collect()
-        .groupBy(_.getLong(0))
-        .map { case (uid, rows) =>
-          uid -> rows.map(r => s"${r.getString(1)}:${r.getLong(2)}")
-            .sorted.mkString(",") }
-      assert(got.keySet == want.keySet)
-      got.foreach { case (uid, csv) =>
-        assert(csv == want(uid), s"user $uid: $csv vs ${want(uid)}")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val mem = MemoryStream[streaming.Event]
+      val q = streaming.Streams.userTypeCountsTws(mem.toDS())
+        .writeStream.format("memory").queryName("type_counts_out")
+        .outputMode("update")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_mapstate").toString)
+        .start()
+      try {
+        val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
+          e.user_id, e.event_type, e.value, e.props))
+        evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
+          mem.addData(chunk)
+          q.processAllAvailable()
+        }
+        val got = spark.table("type_counts_out").collect()
+          .groupBy(_.getLong(0))
+          .map { case (uid, rows) =>
+            uid -> rows.maxBy(_.getLong(2)).getString(1) }
+        val want = sources.Tables.events(spark, sf)
+          .groupBy($"user_id", $"event_type").count().collect()
+          .groupBy(_.getLong(0))
+          .map { case (uid, rows) =>
+            uid -> rows.map(r => s"${r.getString(1)}:${r.getLong(2)}")
+              .sorted.mkString(",") }
+        assert(got.keySet == want.keySet)
+        got.foreach { case (uid, csv) =>
+          assert(csv == want(uid), s"user $uid: $csv vs ${want(uid)}")
+        }
+      } finally q.stop()
     }
   }
 
   test("streaming funnel matcher equals the batch matchPath (q80)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[streaming.Event]
-    val q = streaming.Streams
-      .funnelMatchesTws(mem.toDS(), Seq("view", "view", "purchase"))
-      .writeStream.format("memory").queryName("funnel_out")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_funnel").toString)
-      .start()
-    try {
-      // deterministically SCRAMBLE each chunk before delivery: the
-      // matcher's whole point is reconstructing final event-time order
-      // from out-of-order arrival, so the replay must not hand it
-      // pre-sorted input (within-chunk disorder is watermark-safe;
-      // cross-chunk disorder would change what counts as late)
-      val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
-        e.user_id, e.event_type, e.value, e.props))
-      evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
-        mem.addData(chunk.sortBy(e => (e.event_id * 2654435761L) & 0xffffffffL))
+    withRocksDb {
+      val mem = MemoryStream[streaming.Event]
+      val q = streaming.Streams
+        .funnelMatchesTws(mem.toDS(), Seq("view", "view", "purchase"))
+        .writeStream.format("memory").queryName("funnel_out")
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_funnel").toString)
+        .start()
+      try {
+        // deterministically SCRAMBLE each chunk before delivery: the
+        // matcher's whole point is reconstructing final event-time order
+        // from out-of-order arrival, so the replay must not hand it
+        // pre-sorted input (within-chunk disorder is watermark-safe;
+        // cross-chunk disorder would change what counts as late)
+        val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
+          e.user_id, e.event_type, e.value, e.props))
+        evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
+          mem.addData(chunk.sortBy(e => (e.event_id * 2654435761L) & 0xffffffffL))
+          q.processAllAvailable()
+        }
+        // two sentinel batches: advance the watermark past every real
+        // event, then give the engine a batch in which the finalization
+        // timers actually fire (watermark lags one batch)
+        val s0 = sentinel
+        mem.addData(Seq(streaming.Event(-1L, s0.ts, -1L, "__sentinel",
+          0.0, "{}")))
         q.processAllAvailable()
-      }
-      // two sentinel batches: advance the watermark past every real
-      // event, then give the engine a batch in which the finalization
-      // timers actually fire (watermark lags one batch)
-      val s0 = sentinel
-      mem.addData(Seq(streaming.Event(-1L, s0.ts, -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      mem.addData(Seq(streaming.Event(-2L,
-        new Timestamp(s0.ts.getTime + 60000), -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      val got = spark.table("funnel_out").collect()
-        .filter(_.getLong(0) >= 0)
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
-          r.getLong(3), r.getTimestamp(4).getTime)).toSet
-      val want = SparkEntry.queries("q80_matchpath_funnel")(spark, sf)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
-          r.getLong(3), r.getTimestamp(4).getTime)).toSet
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"funnel matches diverge: extra=${got -- want}, missing=${want -- got}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        mem.addData(Seq(streaming.Event(-2L,
+          new Timestamp(s0.ts.getTime + 60000), -1L, "__sentinel",
+          0.0, "{}")))
+        q.processAllAvailable()
+        val got = spark.table("funnel_out").collect()
+          .filter(_.getLong(0) >= 0)
+          .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
+            r.getLong(3), r.getTimestamp(4).getTime)).toSet
+        val want = SparkEntry.queries("q80_matchpath_funnel")(spark, sf)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
+            r.getLong(3), r.getTimestamp(4).getTime)).toSet
+        assert(want.nonEmpty)
+        assert(got == want,
+          s"funnel matches diverge: extra=${got -- want}, missing=${want -- got}")
+      } finally q.stop()
     }
   }
 
@@ -1731,60 +1449,52 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[streaming.Event]
-    // bigv = view with value >= 30 — the q80e predicate, here over the
-    // same literal chain the plain funnel test matches, so the delta
-    // vs that test isolates exactly the predicate gating
-    val q = streaming.Streams
-      .funnelMatchesTws(mem.toDS(), Seq("bigv", "view", "purchase"),
-        Map("bigv" -> ((e: streaming.PendingEvent) =>
-          e.event_type == "view" && e.value >= 30.0)))
-      .writeStream.format("memory").queryName("funnel_pred_out")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_funnelp").toString)
-      .start()
-    try {
-      val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
-        e.user_id, e.event_type, e.value, e.props))
-      evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
-        mem.addData(chunk.sortBy(e => (e.event_id * 2654435761L) & 0xffffffffL))
+    withRocksDb {
+      val mem = MemoryStream[streaming.Event]
+      // bigv = view with value >= 30 — the q80e predicate, here over the
+      // same literal chain the plain funnel test matches, so the delta
+      // vs that test isolates exactly the predicate gating
+      val q = streaming.Streams
+        .funnelMatchesTws(mem.toDS(), Seq("bigv", "view", "purchase"),
+          Map("bigv" -> ((e: streaming.PendingEvent) =>
+            e.event_type == "view" && e.value >= 30.0)))
+        .writeStream.format("memory").queryName("funnel_pred_out")
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_funnelp").toString)
+        .start()
+      try {
+        val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
+          e.user_id, e.event_type, e.value, e.props))
+        evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
+          mem.addData(chunk.sortBy(e => (e.event_id * 2654435761L) & 0xffffffffL))
+          q.processAllAvailable()
+        }
+        val s0 = sentinel
+        mem.addData(Seq(streaming.Event(-1L, s0.ts, -1L, "__sentinel",
+          0.0, "{}")))
         q.processAllAvailable()
-      }
-      val s0 = sentinel
-      mem.addData(Seq(streaming.Event(-1L, s0.ts, -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      mem.addData(Seq(streaming.Event(-2L,
-        new Timestamp(s0.ts.getTime + 60000), -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      val got = spark.table("funnel_pred_out").collect()
-        .filter(_.getLong(0) >= 0)
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
-          r.getLong(3), r.getTimestamp(4).getTime)).toSet
-      val want = operators.Windows.matchPathQuant(
-        sources.Tables.events(spark, sf),
-        Seq("bigv", "view", "purchase"),
-        Map("bigv" -> (col("event_type") === "view" &&
-          col("value") >= lit(30.0))))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
-          r.getLong(3), r.getTimestamp(4).getTime)).toSet
-      assert(want.nonEmpty)
-      assert(got == want,
-        s"predicate funnel diverges: extra=${got -- want}, " +
-          s"missing=${want -- got}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        mem.addData(Seq(streaming.Event(-2L,
+          new Timestamp(s0.ts.getTime + 60000), -1L, "__sentinel",
+          0.0, "{}")))
+        q.processAllAvailable()
+        val got = spark.table("funnel_pred_out").collect()
+          .filter(_.getLong(0) >= 0)
+          .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
+            r.getLong(3), r.getTimestamp(4).getTime)).toSet
+        val want = operators.Windows.matchPathQuant(
+          sources.Tables.events(spark, sf),
+          Seq("bigv", "view", "purchase"),
+          Map("bigv" -> (col("event_type") === "view" &&
+            col("value") >= lit(30.0))))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
+            r.getLong(3), r.getTimestamp(4).getTime)).toSet
+        assert(want.nonEmpty)
+        assert(got == want,
+          s"predicate funnel diverges: extra=${got -- want}, " +
+            s"missing=${want -- got}")
+      } finally q.stop()
     }
   }
 
@@ -1792,10 +1502,7 @@ class StreamingSpec extends AnyFunSuite {
       " (differential over chunkings)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
+    withRocksDb {
     // batch twin: the a01 union-carry operator over the same rows,
     // right side pre-deduplicated per (user, ts) to max event_id —
     // the same tie contract the processor's fold order implements
@@ -1814,7 +1521,6 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
         r.getTimestamp(3).getTime, r.getLong(4))).toSet
     assert(want.nonEmpty)
-    try {
       // DIFFERENTIAL over delivery shapes: the finalized fold must land
       // on the batch answer whatever the arrival order and micro-batch
       // boundaries — each round scrambles with a different multiplier
@@ -1855,11 +1561,6 @@ class StreamingSpec extends AnyFunSuite {
             s"as-of diverges at chunks=$nChunks: extra=${got -- want}, " +
               s"missing=${want -- got}")
         } finally q.stop()
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
       }
     }
   }
@@ -1910,89 +1611,73 @@ class StreamingSpec extends AnyFunSuite {
         r.getTimestamp(3).getTime,
         r.getTimestamp(3).getNanos / 1000 % 1000, r.getLong(4))).toSet
     assert(batch == want, s"batch twin disagrees: $batch")
-    val skey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(skey)
-    spark.conf.set(skey, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[streaming.Event]
-    val q = streaming.Streams
-      .asofEnrichTws(mem.toDS(), "view", "purchase")
-      .writeStream.format("memory").queryName("asof_subms_out")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_asof_us").toString)
-      .start()
-    try {
-      // deliver fully reversed (every row out of order), then advance
-      // the watermark past the fixture with two sentinel batches
-      mem.addData(evs.reverse)
-      q.processAllAvailable()
-      mem.addData(Seq(streaming.Event(-1L,
-        new Timestamp(base + 48L * 3600 * 1000), -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      mem.addData(Seq(streaming.Event(-2L,
-        new Timestamp(base + 49L * 3600 * 1000), -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      val got = spark.table("asof_subms_out").collect()
-        .filter(_.getLong(0) >= 0)
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
-          r.getTimestamp(2).getNanos / 1000 % 1000,
-          r.getTimestamp(3).getTime,
-          r.getTimestamp(3).getNanos / 1000 % 1000, r.getLong(4))).toSet
-      assert(got == want,
-        s"sub-ms as-of diverges: extra=${got -- want}, " +
-          s"missing=${want -- got}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(skey, v)
-        case None => spark.conf.unset(skey)
-      }
+    withRocksDb {
+      val mem = MemoryStream[streaming.Event]
+      val q = streaming.Streams
+        .asofEnrichTws(mem.toDS(), "view", "purchase")
+        .writeStream.format("memory").queryName("asof_subms_out")
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_asof_us").toString)
+        .start()
+      try {
+        // deliver fully reversed (every row out of order), then advance
+        // the watermark past the fixture with two sentinel batches
+        mem.addData(evs.reverse)
+        q.processAllAvailable()
+        mem.addData(Seq(streaming.Event(-1L,
+          new Timestamp(base + 48L * 3600 * 1000), -1L, "__sentinel",
+          0.0, "{}")))
+        q.processAllAvailable()
+        mem.addData(Seq(streaming.Event(-2L,
+          new Timestamp(base + 49L * 3600 * 1000), -1L, "__sentinel",
+          0.0, "{}")))
+        q.processAllAvailable()
+        val got = spark.table("asof_subms_out").collect()
+          .filter(_.getLong(0) >= 0)
+          .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
+            r.getTimestamp(2).getNanos / 1000 % 1000,
+            r.getTimestamp(3).getTime,
+            r.getTimestamp(3).getNanos / 1000 % 1000, r.getLong(4))).toSet
+        assert(got == want,
+          s"sub-ms as-of diverges: extra=${got -- want}, " +
+            s"missing=${want -- got}")
+      } finally q.stop()
     }
   }
 
   test("transformWithState ListState recent-buffer equals the batch rank") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[streaming.Event]
-    val q = streaming.Streams.recentEventsTws(mem.toDS())
-      .writeStream.format("memory").queryName("recent_out")
-      .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_recent").toString)
-      .start()
-    try {
-      val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
-        e.user_id, e.event_type, e.value, e.props))
-      evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
-        mem.addData(chunk)
-        q.processAllAvailable()
-      }
-      // last emission per user = the one with the largest monotone
-      // n_seen counter (cross-batch row order from the memory sink is
-      // not a documented guarantee, so row position is not usable)
-      val got = spark.table("recent_out").collect()
-        .groupBy(_.getLong(0))
-        .map { case (uid, rows) =>
-          uid -> rows.maxBy(_.getLong(2)).getString(1) }
-      val want = SparkEntry.queries("st11_recent_events")(spark, sf)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got.keySet == want.keySet)
-      got.foreach { case (uid, csv) =>
-        assert(csv == want(uid), s"user $uid: stream $csv vs batch ${want(uid)}")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val mem = MemoryStream[streaming.Event]
+      val q = streaming.Streams.recentEventsTws(mem.toDS())
+        .writeStream.format("memory").queryName("recent_out")
+        .outputMode("update")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_recent").toString)
+        .start()
+      try {
+        val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
+          e.user_id, e.event_type, e.value, e.props))
+        evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
+          mem.addData(chunk)
+          q.processAllAvailable()
+        }
+        // last emission per user = the one with the largest monotone
+        // n_seen counter (cross-batch row order from the memory sink is
+        // not a documented guarantee, so row position is not usable)
+        val got = spark.table("recent_out").collect()
+          .groupBy(_.getLong(0))
+          .map { case (uid, rows) =>
+            uid -> rows.maxBy(_.getLong(2)).getString(1) }
+        val want = SparkEntry.queries("st11_recent_events")(spark, sf)
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(got.keySet == want.keySet)
+        got.foreach { case (uid, csv) =>
+          assert(csv == want(uid), s"user $uid: stream $csv vs batch ${want(uid)}")
+        }
+      } finally q.stop()
     }
   }
 
@@ -2005,50 +1690,42 @@ class StreamingSpec extends AnyFunSuite {
       extra: Seq[Ev] = Nil): Set[(Long, Long, Long, Long, Long)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[streaming.Event]
-    val q = streaming.Streams
-      .quantFunnelMatchesTws(mem.toDS(), pattern)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_qfunnel").toString)
-      .start()
-    try {
-      // deterministic within-chunk SCRAMBLE (see the literal funnel
-      // test): the matcher must reconstruct final event-time order
-      val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
-        e.user_id, e.event_type, e.value, e.props))
-      evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
-        mem.addData(chunk.sortBy(e => (e.event_id * 2654435761L) & 0xffffffffL))
+    withRocksDb {
+      val mem = MemoryStream[streaming.Event]
+      val q = streaming.Streams
+        .quantFunnelMatchesTws(mem.toDS(), pattern)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_qfunnel").toString)
+        .start()
+      try {
+        // deterministic within-chunk SCRAMBLE (see the literal funnel
+        // test): the matcher must reconstruct final event-time order
+        val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
+          e.user_id, e.event_type, e.value, e.props))
+        evs.grouped(math.max(1, evs.size / 4)).foreach { chunk =>
+          mem.addData(chunk.sortBy(e => (e.event_id * 2654435761L) & 0xffffffffL))
+          q.processAllAvailable()
+        }
+        if (extra.nonEmpty) {
+          mem.addData(extra.map(e => streaming.Event(e.event_id, e.ts,
+            e.user_id, e.event_type, e.value, e.props)))
+          q.processAllAvailable()
+        }
+        val s0 = sentinel
+        mem.addData(Seq(streaming.Event(-1L, s0.ts, -1L, "__sentinel",
+          0.0, "{}")))
         q.processAllAvailable()
-      }
-      if (extra.nonEmpty) {
-        mem.addData(extra.map(e => streaming.Event(e.event_id, e.ts,
-          e.user_id, e.event_type, e.value, e.props)))
+        mem.addData(Seq(streaming.Event(-2L,
+          new Timestamp(s0.ts.getTime + 60000), -1L, "__sentinel",
+          0.0, "{}")))
         q.processAllAvailable()
-      }
-      val s0 = sentinel
-      mem.addData(Seq(streaming.Event(-1L, s0.ts, -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      mem.addData(Seq(streaming.Event(-2L,
-        new Timestamp(s0.ts.getTime + 60000), -1L, "__sentinel",
-        0.0, "{}")))
-      q.processAllAvailable()
-      spark.table(name).collect()
-        .filter(_.getLong(0) >= 0)
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
-          r.getLong(3), r.getTimestamp(4).getTime)).toSet
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        spark.table(name).collect()
+          .filter(_.getLong(0) >= 0)
+          .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime,
+            r.getLong(3), r.getTimestamp(4).getTime)).toSet
+      } finally q.stop()
     }
   }
 
