@@ -198,14 +198,24 @@ object Bench {
         .getSystemLoadAverage
     val loadBefore = loadavg()
 
+    // Generated classes Janino compiled while each query ran, summed
+    // over its runs (warmup and retries included): a query that
+    // re-compiles on every run shows it here, not only as wall time.
+    val compiles = collection.mutable.LinkedHashMap.empty[String, Long]
+    def compileCount =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+
     def run(name: String): Double = {
       val start = System.nanoTime()
+      val compilesBefore = compileCount
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
-      }
+      } finally compiles(name) =
+        compiles.getOrElse(name, 0L) + compileCount - compilesBefore
       val dt = (System.nanoTime() - start) / 1e9
       val ratio = t0.get(name).map(b => f" (${dt / b}%4.2fx t0)").getOrElse("")
       System.err.println(f"[bench] $name%-28s $dt%8.2fs$ratio")
@@ -363,6 +373,7 @@ object Bench {
          |"queries":${jmap(folded, "%.3f")},
          |$scaleExtra"ratios_vs_t0":${jmap(folded.collect { case (k, v) if v >= 0 && t0.contains(k) => (k, v / t0(k)) }, "%.3f")},
          |"reruns_first_pass":${jmap(suspects.map(k => k -> byName(k)), "%.3f")},
+         |"codegen_compiles":${jmap(compiles.toSeq.map { case (k, n) => k -> n.toDouble }, "%.0f")},
          |"regressions":${regressions.map("\"" + _._1 + "\"").mkString("[", ",", "]")}}
          |""".stripMargin
     // Only a FULL suite at the driver's bench scale owns BENCH_DETAIL.json;

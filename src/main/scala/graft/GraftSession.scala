@@ -19,6 +19,16 @@ import org.apache.spark.sql.SparkSession
   *     the engine never hard-codes partition counts in operator code.
   *   - Parquet timestamps written as INT64 micros so any engine (DuckDB,
   *     Arrow) reads verification dumps without INT96 legacy handling.
+  *   - Per-session artifact isolation off. With it on, a session's
+  *     `ArtifactManager` stamps its jobs with
+  *     `JobArtifactState(sessionUUID, …)`, and the executor builds one
+  *     classloader per UUID. `CodeGenerator.compile` keys its cache on
+  *     `(contextClassLoader, code)`, so every `newSession()` and every
+  *     streaming query's cloned session re-compiles each executor-side
+  *     class (whole-stage iterators, unsafe projections) from
+  *     byte-identical source, and the JIT then compiles the new classes
+  *     again. graft adds no session artifacts (no `addJar`, no
+  *     `addArtifact`), so isolation buys it nothing.
   */
 object GraftSession {
 
@@ -64,6 +74,9 @@ object GraftSession {
     // opt-in via their own flags) — see graft.plans.GraftExtensions.
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.ui.enabled", "false")
+    // One executor classloader for every session, so generated classes
+    // compiled by one session are reused by the next (see above).
+    .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Local session for tests/benchmarks; registers graft's SQL functions. */
   def local(cores: String = "*", appName: String = "graft"): SparkSession = {

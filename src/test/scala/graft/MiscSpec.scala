@@ -377,4 +377,46 @@ class MiscSpec extends AnyFunSuite {
       assert(spark.conf.getOption(unsetKey).isEmpty)
     } finally spark.conf.unset(setKey)
   }
+
+  test("a new session and a stream's cloned session share the executor " +
+      "classloader, so re-running a query compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.col
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // The task threads' context classloaders, then the number of classes
+    // a 4-partition aggregate (a whole-stage pipeline on each side of
+    // its shuffle, both compiled in executor tasks) compiles.
+    def runIn(s: org.apache.spark.sql.SparkSession): (Set[Int], Long) = {
+      val loaders = s.range(0, 4, 1, 4).mapPartitions(_ =>
+        Iterator(System.identityHashCode(
+          Thread.currentThread.getContextClassLoader)))(
+        org.apache.spark.sql.Encoders.scalaInt).collect().toSet
+      val before = compiles
+      s.range(0, 4000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+        .write.format("noop").mode("overwrite").save()
+      (loaders, compiles - before)
+    }
+    val (base, _) = runIn(spark)
+    val (fresh, freshCompiles) = runIn(spark.newSession())
+
+    val dir = sources.Writers.scratchDir("misc", "sessionLoader")
+    sources.Writers.freshScratch(spark, dir, "src")
+    spark.range(1).write.mode("append").parquet(s"$dir/src")
+    @volatile var inStream: Option[(Set[Int], Long)] = None
+    streaming.Streams.startStream(spark, s"$dir/src", spark.range(1).schema,
+        s"$dir/ckpt", trigger = org.apache.spark.sql.streaming.Trigger
+          .AvailableNow()) { (b, _) =>
+      inStream = Some(runIn(b.sparkSession))
+    }.awaitTermination()
+    val (streamed, streamCompiles) =
+      inStream.getOrElse(fail("the stream ran no batch"))
+
+    assert(base.size == 1, s"task threads disagree on their loader: $base")
+    assert(fresh == base, "newSession() tasks run under their own classloader")
+    assert(streamed == base,
+      "a stream's cloned session runs its tasks under its own classloader")
+    assert(freshCompiles == 0, s"newSession() re-compiled $freshCompiles classes")
+    assert(streamCompiles == 0,
+      s"the stream's cloned session re-compiled $streamCompiles classes")
+  }
 }

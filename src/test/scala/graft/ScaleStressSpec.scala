@@ -30,7 +30,12 @@ class ScaleStressSpec extends AnyFunSuite
   private val Copies = 10
   private val Dim = 64
 
+  /** The round's committed artifact. A run writes its copy under
+    * `target/`, so a test run never rewrites a tracked file; the
+    * committed one changes only when someone copies a run's file over
+    * it on purpose. */
   private val ArtifactFile = "SCALE_r16.json"
+  private val RunArtifactFile = s"target/$ArtifactFile"
   private val PrevArtifactFile = "SCALE_r15.json"
 
   /** The COMPLETE set of metric names any test in this suite can
@@ -128,8 +133,9 @@ class ScaleStressSpec extends AnyFunSuite
       out
     }
 
-  /** Rows already present in the artifact on disk (falling back to the
-    * previous round's file the first time), so a partial run
+  /** Rows already present in the artifact on disk — this checkout's
+    * run copy, else the committed artifact, else (the first time) the
+    * previous round's file — so a partial run
     * (e.g. `testOnly -- -z q17a`) updates its own metrics without
     * clobbering the rest of the table. Every on-disk row must name a
     * KNOWN metric — an unknown name means the artifact was hand-edited
@@ -145,9 +151,10 @@ class ScaleStressSpec extends AnyFunSuite
     * fresh), and a name leaves the list the moment a run re-records it. */
   private def existingRows()
       : (Seq[(String, (Double, Double))], Set[String]) = {
-    val cur = java.nio.file.Paths.get(ArtifactFile)
-    val fromPrev = !java.nio.file.Files.exists(cur)
-    val p = if (fromPrev) java.nio.file.Paths.get(PrevArtifactFile) else cur
+    val cur = Seq(RunArtifactFile, ArtifactFile)
+      .map(java.nio.file.Paths.get(_)).find(java.nio.file.Files.exists(_))
+    val fromPrev = cur.isEmpty
+    val p = cur.getOrElse(java.nio.file.Paths.get(PrevArtifactFile))
     if (!java.nio.file.Files.exists(p)) return (Nil, Set.empty)
     if (fromPrev)
       println(s"[ScaleStressSpec] $ArtifactFile absent — carrying rows " +
@@ -199,8 +206,9 @@ class ScaleStressSpec extends AnyFunSuite
            |  }
            |}
            |""".stripMargin
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(ArtifactFile), json)
+      val out = java.nio.file.Paths.get(RunArtifactFile)
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.writeString(out, json)
     }
     super.afterAll()
   }
