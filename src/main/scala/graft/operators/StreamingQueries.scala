@@ -752,9 +752,7 @@ object StreamingQueries {
         WriterQueries.scd2MergeStep(dim, id, b); ()
       }
     }
-    // resolve the LATEST state across version dirs: a restarted source
-    // may coalesce several pending chunks into one batch, so the
-    // chain's length is the number of BATCHES, not chunks written
+    // resolve the LATEST state across version dirs (one per batch)
     WriterQueries.scd2State(s, dim,
       WriterQueries.scd2LatestVersion(s, dim))
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Row type for typed stateful processing over the events table. */
@@ -699,39 +699,64 @@ object Streams {
     * at `src` read with `schema` (a file source needs the explicit
     * schema and an existing `src` dir), optionally reshaped by
     * `transform` (the st12–st14 funnels), checkpointed at `ckpt`, with
-    * `step` run on every micro-batch through foreachBatch. */
+    * `step` run on every micro-batch through foreachBatch. The source
+    * lists `src` recursively: [[publishChunk]] lands each chunk in its
+    * own sub-directory. */
   def startStream(s: SparkSession, src: String, schema: StructType,
       ckpt: String, transform: DataFrame => DataFrame = identity,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
       outputMode: String = "append")(
       step: (DataFrame, Long) => Unit): StreamingQuery =
-    transform(s.readStream.schema(schema).parquet(src))
+    transform(s.readStream.schema(schema)
+        .option("recursiveFileLookup", "true").parquet(src))
       .writeStream.outputMode(outputMode)
       .option("checkpointLocation", ckpt)
-      .trigger(trigger)
       .foreachBatch(step)
       .start()
 
-  /** The chunk feeder of the long-running sites (st12–st24): ONE query,
-    * started by `query`, stays up while each chunk is appended to
-    * `src` and drained with processAllAvailable, so every chunk has
-    * been fully processed before the next one is written. One query
-    * start-up for the whole run, but the running trigger loop may split
-    * a multi-file chunk across micro-batches (see [[auditGate]] for the
-    * sites that cannot take that). */
+  /** Publish `chunk` into the stream source `src` atomically: write it
+    * to a staging sibling, then move it to `src/<uuid>` with ONE
+    * directory rename, so a running query lists all of its files or
+    * none (written into `src`, its part files land one rename at a time
+    * and a trigger in between splits it over two batches). 100 TB: the
+    * rename is atomic on the local FS and HDFS, not on object stores,
+    * which need a manifest-listed source (the file sink's
+    * `_spark_metadata` log is the in-tree example). */
+  def publishChunk(src: String, chunk: DataFrame): Unit = {
+    val (fs, dir) = graft.sources.Writers.fsOf(chunk.sparkSession, src)
+    val id = java.util.UUID.randomUUID().toString
+    val staged = new org.apache.hadoop.fs.Path(s"${dir}_staging-$id")
+    chunk.write.parquet(staged.toString)
+    require(fs.rename(staged, new org.apache.hadoop.fs.Path(dir, id)),
+      s"publishChunk: rename $staged into $src failed")
+  }
+
+  /** The chunk feeder of every file-source site (st12–st28): ONE query,
+    * started by `query`, stays up while each chunk is published with
+    * [[publishChunk]] (same 100 TB limit) and drained with
+    * processAllAvailable, so chunk k is exactly micro-batch k. */
   def feedChunks(src: String, chunks: Seq[DataFrame])(
       query: => StreamingQuery): Unit = {
     val q = query
     try chunks.foreach { c =>
-      c.write.mode("append").parquet(src)
+      publishChunk(src, c)
       q.processAllAvailable()
     } finally q.stop()
   }
 
+  /** The restart phase: publish the chunks that arrived while the query
+    * was down, restart it with `query`, drain once and stop. */
+  def catchUp(src: String, chunks: Seq[DataFrame])(
+      query: => StreamingQuery): Unit = {
+    chunks.foreach(publishChunk(src, _))
+    val q = query
+    try q.processAllAvailable() finally q.stop()
+  }
+
   /** The per-commit audit gate (st25–st28): an artifact is seeded,
     * every streamed chunk is admitted by `admit` as exactly one
-    * micro-batch, and right after each commit `audit(batchId)` runs the
-    * artifact's integrity checks (rows of check_name, n_violations).
+    * micro-batch of one [[feedChunks]] query, and right after each
+    * commit `audit(batchId)` runs the artifact's integrity checks
+    * (rows of check_name, n_violations).
     * Returns one row per (phase, check):
     *   - stream_max: the MAX violations any per-commit audit saw —
     *     all zeros pins that the engine's own commit protocol never
@@ -742,18 +767,9 @@ object Streams {
     *     returns the same audit's checks, whose counts the oracle
     *     recomputes by set algebra.
     *
-    * Batch structure: one Trigger.AvailableNow run per chunk, written
-    * strictly BEFORE that run starts and continuing the checkpoint
-    * (batch ids carry on across runs), so chunk k is exactly batch k.
-    * A continuously running query races its trigger loop against the
-    * multi-file chunk write and can split one chunk across two
-    * micro-batches (observed at sf1, where the write window is wide).
-    * The gates cannot take that: their corruption steps name fixed
-    * versions (st25's chain must end at v3, one merge per chunk), and
-    * `audit` names the admitted-so-far slice by batch id. So the batch
-    * ids are `require`d to be 0, 1, … one per chunk, failing loudly
-    * rather than auditing an artifact shaped differently than the
-    * oracle's algebra assumes. foreachBatch runs sequentially on the
+    * The corruption steps name fixed versions and `audit` names the
+    * admitted-so-far slice by batch id, so the ids are `require`d to be
+    * 0, 1, … one per chunk. foreachBatch runs sequentially on the
     * driver, so the running max is a plain map.
     *
     * 100 TB: the per-commit bill is the audit's (dq06/dq07/dq08's); in
@@ -772,10 +788,8 @@ object Streams {
     val streamMax = scala.collection.mutable.Map.empty[String, Long]
       .withDefaultValue(0L)
     val seenIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-    chunks.foreach { c =>
-      c.write.mode("append").parquet(src)
-      val q = startStream(s, src, schema, ckpt,
-          trigger = Trigger.AvailableNow()) { (b, id) =>
+    feedChunks(src, chunks) {
+      startStream(s, src, schema, ckpt) { (b, id) =>
         admit(seeded, b, id)
         seenIds += id
         audit(id).collect().foreach { r =>
@@ -783,7 +797,6 @@ object Streams {
           streamMax(k) = math.max(streamMax(k), n)
         }
       }
-      try q.awaitTermination() finally q.stop()
     }
     require(seenIds.toSeq == chunks.indices.map(_.toLong),
       s"$base expects batch ids ${chunks.indices.mkString(",")}, one per " +

@@ -20,6 +20,28 @@ class AuditSpec extends AnyFunSuite {
     assert(rows("lineitem_discount_domain") == 0L)
   }
 
+  test("st25's gate admits its three chunks through ONE streaming query") {
+    // chunk k is batch k of one long-running query (atomic publish), so
+    // a gate pays stream start-up once, not once per chunk
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val rows =
+      try SparkEntry.queries("st25_manifest_audit_gate")(spark, sf).collect()
+      finally spark.streams.removeListener(listener)
+    assert(started.get == 1, s"st25 started ${started.get} streaming queries")
+    val streamMax = rows.filter(_.getString(0) == "stream_max")
+    assert(streamMax.length == 4 && streamMax.forall(_.getLong(2) == 0L),
+      s"healthy commits audited non-zero: ${streamMax.mkString(", ")}")
+  }
+
   test("st26's gate is not vacuous: a half-landed commit (postings " +
       "without sizes) fires at the next audit") {
     // st26's stream_max rows pin all-zeros on healthy commits; this is

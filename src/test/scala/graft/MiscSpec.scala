@@ -401,13 +401,13 @@ class MiscSpec extends AnyFunSuite {
 
     val dir = sources.Writers.scratchDir("misc", "sessionLoader")
     sources.Writers.freshScratch(spark, dir, "src")
-    spark.range(1).write.mode("append").parquet(s"$dir/src")
     @volatile var inStream: Option[(Set[Int], Long)] = None
-    streaming.Streams.startStream(spark, s"$dir/src", spark.range(1).schema,
-        s"$dir/ckpt", trigger = org.apache.spark.sql.streaming.Trigger
-          .AvailableNow()) { (b, _) =>
-      inStream = Some(runIn(b.sparkSession))
-    }.awaitTermination()
+    streaming.Streams.feedChunks(s"$dir/src", Seq(spark.range(1).toDF())) {
+      streaming.Streams.startStream(spark, s"$dir/src",
+          spark.range(1).schema, s"$dir/ckpt") { (b, _) =>
+        inStream = Some(runIn(b.sparkSession))
+      }
+    }
     val (streamed, streamCompiles) =
       inStream.getOrElse(fail("the stream ran no batch"))
 

@@ -404,6 +404,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(after == before, "redelivery must not change sink state")
   }
 
+  test("feedChunks delivers each multi-file chunk as exactly one" +
+      " micro-batch of the running query") {
+    // Four part files per chunk, and the slowrename scheme sleeps on
+    // every part-file rename: a chunk committed straight into the live
+    // source dir is listed part-way through and split over batches.
+    SlowRenameFileSystem.register(spark)
+    val base = java.nio.file.Files.createTempDirectory("graft_split").toString
+    val src = s"${SlowRenameFileSystem.Scheme}://$base/src"
+    sources.Writers.freshScratch(spark, src)
+    val chunks = (0 until 3).map(k =>
+      spark.range(k * 10000L, k * 10000L + 1000 + k, 1, 4).toDF())
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    streaming.Streams.feedChunks(src, chunks) {
+      streaming.Streams.startStream(spark, src, chunks.head.schema,
+        s"$base/ckpt") { (b, id) => seen += ((id, b.count())) }
+    }
+    assert(seen.toSeq == Seq((0L, 1000L), (1L, 1001L), (2L, 1002L)),
+      s"(batch id, rows) per micro-batch: $seen")
+  }
+
   test("st09: checkpointed restart resumes exactly-once (file source)") {
     // The RECOVERABLE path end-to-end: a file source (offsets = files
     // seen) + checkpoint + the idempotent upsert sink. The query is
@@ -429,10 +449,8 @@ class StreamingSpec extends AnyFunSuite {
       startQuery())
 
     // restart from the checkpoint with the rest of the data landed
-    chunks(1).toDF().write.mode("append").parquet(srcDir)
-    Seq(sentinel).toDF().write.mode("append").parquet(srcDir)
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(srcDir,
+      Seq(chunks(1).toDF(), Seq(sentinel).toDF()))(startQuery())
 
     val pick = Seq("window_start", "event_type", "n", "sum_value")
     val twin = streaming.Streams
@@ -473,15 +491,10 @@ class StreamingSpec extends AnyFunSuite {
       streaming.Streams.feedChunks(srcDir,
         Seq(chunks.head.toDF(), chunks(1).toDF()))(startQuery())
 
-      chunks.drop(2).foreach(c =>
-        c.toDF().write.mode("append").parquet(srcDir))
       val s0 = sentinel
-      Seq(s0).toDF().write.mode("append").parquet(srcDir)
-      Seq(s0.copy(event_id = -2L,
-          ts = new Timestamp(s0.ts.getTime + 60000)))
-        .toDF().write.mode("append").parquet(srcDir)
-      val q2 = startQuery()
-      try q2.processAllAvailable() finally q2.stop()
+      streaming.Streams.catchUp(srcDir, chunks.drop(2).map(_.toDF()) ++
+        Seq(Seq(s0).toDF(), Seq(s0.copy(event_id = -2L,
+          ts = new Timestamp(s0.ts.getTime + 60000))).toDF()))(startQuery())
 
       val got = streaming.Streams.readMatchesSink(spark, dest)
         .filter($"user_id" >= 0).collect()
@@ -579,10 +592,8 @@ class StreamingSpec extends AnyFunSuite {
     streaming.Streams.feedChunks(srcDir,
       Seq(chunks.head.toDF("doc_id", "text")))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
-    chunks.drop(1).foreach(c =>
-      c.toDF("doc_id", "text").write.mode("append").parquet(srcDir))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(srcDir,
+      chunks.drop(1).map(_.toDF("doc_id", "text")))(startQuery())
 
     val got = graft.streaming.Streams.readSink(spark, dest,
         org.apache.spark.sql.types.StructType(Seq(
@@ -645,10 +656,8 @@ class StreamingSpec extends AnyFunSuite {
     streaming.Streams.feedChunks(srcDir,
       Seq(chunks.head.toDF("vec_id", "embedding")))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
-    chunks.drop(1).foreach(c =>
-      c.toDF("vec_id", "embedding").write.mode("append").parquet(srcDir))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(srcDir,
+      chunks.drop(1).map(_.toDF("vec_id", "embedding")))(startQuery())
 
     val got = graft.streaming.Streams.readSink(spark, dest,
         org.apache.spark.sql.types.StructType(Seq(
@@ -714,10 +723,8 @@ class StreamingSpec extends AnyFunSuite {
     streaming.Streams.feedChunks(srcDir,
       Seq(chunks.head.toSeq.toDF("doc_id")))(startQuery())
     // later chunks arrive while the query is DOWN
-    chunks.drop(1).foreach(c =>
-      c.toSeq.toDF("doc_id").write.mode("append").parquet(srcDir))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(srcDir,
+      chunks.drop(1).map(_.toSeq.toDF("doc_id")))(startQuery())
     val got = graft.streaming.Streams.readSink(spark, dest,
         StructType(Seq(StructField("q_id", LongType),
           StructField("doc_id", LongType),
@@ -771,11 +778,9 @@ class StreamingSpec extends AnyFunSuite {
 
     streaming.Streams.feedChunks(srcDir,
       Seq(chunks.head.toDF("vec_id", "embedding", "label")))(startQuery())
-    chunks.drop(1).foreach(c =>
-      c.toDF("vec_id", "embedding", "label")
-        .write.mode("append").parquet(srcDir))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(srcDir,
+      chunks.drop(1).map(_.toDF("vec_id", "embedding", "label")))(
+      startQuery())
 
     val got = graft.streaming.Streams.readSink(spark, dest,
         org.apache.spark.sql.types.StructType(Seq(
@@ -854,10 +859,8 @@ class StreamingSpec extends AnyFunSuite {
     streaming.Streams.feedChunks(srcDir,
       Seq(chunks.head.toDF("vec_id", "embedding")))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
-    chunks.drop(1).foreach(c =>
-      c.toDF("vec_id", "embedding").write.mode("append").parquet(srcDir))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(srcDir,
+      chunks.drop(1).map(_.toDF("vec_id", "embedding")))(startQuery())
 
     val got = graft.streaming.Streams.readSink(spark, dest,
         org.apache.spark.sql.types.StructType(Seq(
@@ -909,12 +912,9 @@ class StreamingSpec extends AnyFunSuite {
         operators.StreamingQueries.cmsMergeStep(state))
     streaming.Streams.feedChunks(src,
       Seq(docs.filter(pmod($"doc_id", lit(3)) === 0)))(startQuery())
-    docs.filter(pmod($"doc_id", lit(3)) === 1)
-      .write.mode("append").parquet(src)
-    docs.filter(pmod($"doc_id", lit(3)) === 2)
-      .write.mode("append").parquet(src)
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(src,
+      Seq(1, 2).map(k => docs.filter(pmod($"doc_id", lit(3)) === k)))(
+      startQuery())
     val latest = new java.io.File(state).listFiles()
       .map(_.getName).filter(_.startsWith("v")).map(_.drop(1).toInt).max
     val streamed = spark.read.parquet(s"$state/v$latest")
@@ -957,9 +957,7 @@ class StreamingSpec extends AnyFunSuite {
 
     streaming.Streams.feedChunks(src, chunks.take(1))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
-    chunks.drop(1).foreach(_.write.mode("append").parquet(src))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(src, chunks.drop(1))(startQuery())
 
     def rowSet(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getTimestamp(1),
@@ -1019,9 +1017,7 @@ class StreamingSpec extends AnyFunSuite {
 
     streaming.Streams.feedChunks(src, chunks.take(1))(startQuery())
     // chunks 2-3 arrive while the query is DOWN
-    chunks.drop(1).foreach(_.write.mode("append").parquet(src))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(src, chunks.drop(1))(startQuery())
 
     val latest = operators.WriterQueries.scd2LatestVersion(spark, dim)
     assert(latest >= 2L && latest <= 3L,
@@ -1087,10 +1083,9 @@ class StreamingSpec extends AnyFunSuite {
       Seq(docs.filter($"doc_id" % 3 === 1).select($"doc_id", $"text")))(
       startQuery())
     // the second chunk arrives while the query is DOWN
-    docs.filter($"doc_id" % 3 === 2).select($"doc_id", $"text")
-      .write.mode("append").parquet(src)
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(src,
+      Seq(docs.filter($"doc_id" % 3 === 2).select($"doc_id", $"text")))(
+      startQuery())
     val sinkSchema = StructType(Seq(StructField("q_id", LongType),
       StructField("id", LongType), StructField("rrf", DoubleType),
       StructField("rk", IntegerType), StructField("__batch_id", LongType)))
@@ -1196,10 +1191,9 @@ class StreamingSpec extends AnyFunSuite {
       Seq(emb.filter($"vec_id" % 3 === 1).select($"vec_id", $"embedding")))(
       startQuery())
     // the second chunk arrives while the query is DOWN
-    emb.filter($"vec_id" % 3 === 2).select($"vec_id", $"embedding")
-      .write.mode("append").parquet(src)
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
+    streaming.Streams.catchUp(src,
+      Seq(emb.filter($"vec_id" % 3 === 2).select($"vec_id", $"embedding")))(
+      startQuery())
     val sinkSchema = StructType(Seq(StructField("q_id", LongType),
       StructField("vec_id", LongType), StructField("sim", DoubleType),
       StructField("rk", IntegerType), StructField("__batch_id", LongType)))
@@ -1277,15 +1271,10 @@ class StreamingSpec extends AnyFunSuite {
       streaming.Streams.feedChunks(srcDir,
         Seq(chunks.head.toDF(), chunks(1).toDF()))(startQuery())
 
-      chunks.drop(2).foreach(c =>
-        c.toDF().write.mode("append").parquet(srcDir))
       val s0 = sentinel
-      Seq(s0).toDF().write.mode("append").parquet(srcDir)
-      Seq(s0.copy(event_id = -2L,
-          ts = new Timestamp(s0.ts.getTime + 60000)))
-        .toDF().write.mode("append").parquet(srcDir)
-      val q2 = startQuery()
-      try q2.processAllAvailable() finally q2.stop()
+      streaming.Streams.catchUp(srcDir, chunks.drop(2).map(_.toDF()) ++
+        Seq(Seq(s0).toDF(), Seq(s0.copy(event_id = -2L,
+          ts = new Timestamp(s0.ts.getTime + 60000))).toDF()))(startQuery())
 
       val got = streaming.Streams.readSink(spark, dest,
           org.apache.spark.sql.Encoders.product[streaming.AsofMatch].schema)

@@ -16,7 +16,8 @@
 #                   (default: a 10-query cross-family anchored set)
 #
 # Environment: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-# SPARK_GRAFT_CPUS (default 32).
+# SPARK_GRAFT_CPUS (default: this host's `nproc`). Each Bench JVM gets
+# half of MemTotal as heap, clamped to 2-8 GiB (the tier-1 sizing).
 #
 # Output: per-run rows on stderr; ONE JSON line on stdout —
 #   {"metric":"ab_sweep","control":"<sha>","rounds":N,
@@ -43,6 +44,9 @@ fi
 
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -54,10 +58,13 @@ loadavg() { cut -d' ' -f1 /proc/loadavg; }
 
 # --- build both sides once -------------------------------------------------
 CTRL_SHA="$(git -C "$REPO" rev-parse --short "$CONTROL")"
-CTRL_WT="/tmp/graft_ab_ctrl_${CTRL_SHA}"
-if [ ! -d "$CTRL_WT" ]; then
-  git -C "$REPO" worktree add --detach "$CTRL_WT" "$CONTROL" >&2
-fi
+# the control builds in a throwaway clone (objects shared with REPO),
+# so the sweep registers no worktree in REPO and leaves no checkout
+WORK="$(mktemp -d)"
+CTRL_WT="$WORK/control"
+trap 'rm -rf "$CTRL_WT"' EXIT
+git clone -q --shared --no-checkout "$REPO" "$CTRL_WT" >&2
+git -C "$CTRL_WT" checkout -q --detach "$(git -C "$REPO" rev-parse "$CONTROL")" >&2
 echo "[ab] compiling control $CTRL_SHA in $CTRL_WT" >&2
 (cd "$CTRL_WT" && sbt -batch compile >/dev/null 2>&1)
 echo "[ab] compiling working tree (B)" >&2
@@ -68,14 +75,15 @@ echo "[ab] compiling working tree (B)" >&2
 # register — Bench now fails loudly on unknown args) used to abort the
 # sweep under set -e with zero diagnostic after potentially hours of
 # interleaved runs (round-18 review finding).
-ABLOG="/tmp/graft_ab_sweep_$$.log"
-echo "[ab] per-run JVM stderr -> $ABLOG" >&2
+ABLOG="$WORK/ab_sweep.log"
+echo "[ab] per-run JVM stderr -> $ABLOG (heap $HEAP," \
+  "$SPARK_GRAFT_CPUS cores)" >&2
 
 run_one() { # $1 = cwd (also classes root), prints total seconds
   local d="$1"
   (cd "$d" && SPARK_GRAFT_SF_DIR="$SF_DIR" \
     java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-      -Xmx16g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+      "-Xmx$HEAP" -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
       graft.Bench "${QUERIES[@]}" 2>>"$ABLOG" | grep -o '"value":[0-9.]*' \
       | head -1 | cut -d: -f2)
 }
