@@ -404,10 +404,66 @@ object Audit {
   private[operators] val AuditCopyRem = 3L
   private[operators] val AuditCopyOffset = 100000000L
 
+  /** The lexical-index audit's DuckDB CTE chain (`toks` → `drift`),
+    * written once for dq06, st26 and st28 (the [[Similarity
+    * .LexTopkCtes]] precedent): the df-capped index rebuilt over the
+    * `indexed` relation (`postings`, `sizes`, `vocab`), the
+    * frozen-vocabulary recount of the `current` relation, and dq06's
+    * four violation counts `missing`, `orph_d`, `orph_p` and `drift`
+    * ([[lexAuditChecks]]'s arithmetic). Both relations carry
+    * (doc_id, text); each query defines them before the chain and
+    * keeps its own final SELECT. */
+  private[operators] def lexAuditCtes(indexed: String,
+      current: String): String =
+    s"""toks AS (SELECT doc_id, string_split(text, ' ') AS t
+      |          FROM $indexed),
+      |sh AS (SELECT DISTINCT doc_id,
+      |         t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
+      |       FROM toks, LATERAL (SELECT unnest(range(1, len(t) - 1)) AS i) r),
+      |dfs AS (SELECT g, count(*) AS df FROM sh GROUP BY g),
+      |postings AS (SELECT s.doc_id, s.g FROM sh s JOIN dfs USING (g)
+      |             WHERE df <= ${Similarity.S11LexDfCap}),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM postings GROUP BY doc_id),
+      |vocab AS (SELECT DISTINCT g FROM postings),
+      |ctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM $current),
+      |csh AS (SELECT DISTINCT doc_id,
+      |          t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
+      |        FROM ctoks, LATERAL (SELECT unnest(range(1, len(t) - 1)) AS i) r),
+      |recount AS (SELECT c.doc_id, count(*) AS n2
+      |            FROM csh c JOIN vocab USING (g) GROUP BY c.doc_id),
+      |missing AS (SELECT count(*) AS n FROM recount r
+      |            LEFT JOIN sizes s USING (doc_id) WHERE s.doc_id IS NULL),
+      |orph_d AS (SELECT count(*) AS n FROM sizes s
+      |           LEFT JOIN $current c USING (doc_id) WHERE c.doc_id IS NULL),
+      |orph_p AS (SELECT count(*) AS n FROM postings p
+      |           LEFT JOIN $current c USING (doc_id) WHERE c.doc_id IS NULL),
+      |drift AS (SELECT count(*) AS n FROM sizes s
+      |          JOIN recount r USING (doc_id) WHERE s.n <> r.n2)"""
+      .stripMargin
+
+  /** The audited "current" corpus in DuckDB SQL: `documents` after
+    * the deletions and text drift of the shared recipe above, plus —
+    * with `copies` — the relabeled additions awaiting admission (the
+    * SQL twin of st26/st28's `movedCorpus`). */
+  private[operators] def auditCurSql(copies: Boolean): String = {
+    val kept =
+      s"""SELECT doc_id,
+        |  CASE WHEN doc_id % $AuditDriftMod = $AuditDriftRem
+        |    THEN array_to_string((string_split(text, ' '))[1:20], ' ')
+        |    ELSE text END AS text
+        |FROM documents WHERE doc_id % $AuditDelMod <> $AuditDelRem"""
+        .stripMargin
+    if (!copies) kept
+    else s"""$kept
+      |UNION ALL
+      |SELECT doc_id + $AuditCopyOffset, text FROM documents
+      |WHERE doc_id % $AuditCopyMod = $AuditCopyRem""".stripMargin
+  }
+
   /** dq06: STORED-INDEX CONSISTENCY audit — the integrity check a
     * deployment runs against a serving index BEFORE trusting it (the
     * table-format analogue is a manifest/file audit; here it is the
-    * retrieval stack's: does the stored w12-layout lexical index still
+    * retrieval stack's: does the stored w12 lexical index still
     * describe the corpus it serves?). The audited index is genuinely
     * STALE by construction: it is built from a snapshot (doc_id % 7 ≠
     * 3 — reindex time), while the "current" corpus has since gained
@@ -441,34 +497,8 @@ object Audit {
     "dq06_index_audit",
     s"""WITH snap AS (SELECT doc_id, text FROM documents
       |              WHERE doc_id % 7 <> 3),
-      |stoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM snap),
-      |ssh AS (SELECT DISTINCT doc_id,
-      |          t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-      |        FROM stoks, LATERAL (SELECT unnest(range(1, len(t) - 1)) AS i) r),
-      |sdfs AS (SELECT g, count(*) AS df FROM ssh GROUP BY g),
-      |postings AS (SELECT s.doc_id, s.g FROM ssh s JOIN sdfs USING (g)
-      |             WHERE df <= ${Similarity.S11LexDfCap}),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM postings GROUP BY doc_id),
-      |vocab AS (SELECT DISTINCT g FROM postings),
-      |cur AS (SELECT doc_id,
-      |          CASE WHEN doc_id % $AuditDriftMod = $AuditDriftRem
-      |            THEN array_to_string((string_split(text, ' '))[1:20], ' ')
-      |            ELSE text END AS text
-      |        FROM documents WHERE doc_id % $AuditDelMod <> $AuditDelRem),
-      |ctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM cur),
-      |csh AS (SELECT DISTINCT doc_id,
-      |          t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-      |        FROM ctoks, LATERAL (SELECT unnest(range(1, len(t) - 1)) AS i) r),
-      |recount AS (SELECT c.doc_id, count(*) AS n2
-      |            FROM csh c JOIN vocab USING (g) GROUP BY c.doc_id),
-      |missing AS (SELECT count(*) AS n FROM recount r
-      |            LEFT JOIN sizes s USING (doc_id) WHERE s.doc_id IS NULL),
-      |orph_d AS (SELECT count(*) AS n FROM sizes s
-      |           LEFT JOIN cur c USING (doc_id) WHERE c.doc_id IS NULL),
-      |orph_p AS (SELECT count(*) AS n FROM postings p
-      |           LEFT JOIN cur c USING (doc_id) WHERE c.doc_id IS NULL),
-      |drift AS (SELECT count(*) AS n FROM sizes s
-      |          JOIN recount r USING (doc_id) WHERE s.n <> r.n2)
+      |cur AS (${auditCurSql(copies = false)}),
+      |${lexAuditCtes("snap", "cur")}
       |SELECT 'missing_docs' AS check_name, CAST(n AS BIGINT) AS n_violations
       |FROM missing
       |UNION ALL SELECT 'orphaned_docs', CAST(n AS BIGINT) FROM orph_d
@@ -480,11 +510,11 @@ object Audit {
     // REINDEX-time snapshot -> the real stored layout, read back
     val idx = graft.sources.Writers.scratchDir("dq06", d)
     graft.sources.Writers.freshScratch(s, idx)
-    // snapshot once: writeLexIndex's two legs both consume the capped
+    // snapshot once: the writer's two legs both consume the capped
     // postings (the w12 lloyd() precedent — un-checkpointed, the sizes
     // leg re-ran the whole tokenize + corpus-wide df aggregate)
     val (p0, sz0) = Similarity.lexIndexSnap(docs.filter($"doc_id" % 7 =!= 3))
-    graft.sources.Writers.writeLexIndex(p0, sz0, idx)
+    graft.sources.Writers.writeLexIndexV2(p0, sz0, idx, Similarity.LexBuckets)
     val (pr, szr) = graft.sources.Writers.readLexIndex(s, idx)
     // the corpus as it stands NOW: additions, deletions, text drift
     val cur = docs.filter($"doc_id" % AuditDelMod =!= AuditDelRem)
@@ -578,7 +608,10 @@ object Audit {
     * artifact back, run [[lexAuditChecks]]'s four checks against the
     * given current corpus, and append [[lexBucketCheck]] when the dir
     * is stamped `_graft_layout=2` — the layout the stamp declares is
-    * audited, not assumed. ONE definition of "which checks does this
+    * audited, not assumed. Every lexical writer but one stamps its
+    * index, so the unstamped full-read path serves st22's
+    * probe-routed chain only (`Writers.writeLexIndexLeg`), which has
+    * no buckets to check. ONE definition of "which checks does this
     * layout get", shared by the `index_fsck` TVF, st28's per-commit
     * streaming gate, and the engagement probes (the St26/Dq08
     * shared-constant anti-drift discipline applied to DISPATCH: a consumer

@@ -1420,10 +1420,9 @@ object Dedup {
           concat($"text", lit(" zq1 zq2 zq3 zq4 zq5 zq6")).as("text")))
   }
 
-  /** d12's build with the index source EXPLICIT (round-9 advice: tests
-    * thread the stored-index dir as a parameter instead of mutating the
-    * process-global system property, which would race across suites if
-    * the test JVMs ever ran parallel). `indexDir = Some(dir)` is
+  /** d12's build with the index source EXPLICIT (a parameter, not a
+    * process-global system property, which would race across suites
+    * if the test JVMs ever ran parallel). `indexDir = Some(dir)` is
     * stored-index mode: the corpus is NEVER touched — the probe reads
     * the persisted band table AND the persisted shingle sets that
     * [[writeNearDupIndex]] maintains (write once, append per admitted
@@ -1444,10 +1443,7 @@ object Dedup {
 
   val d12IncrementalNearDup: Q = Q(
     "d12_incremental_neardup", d12OracleSql) { (s, d) =>
-    // -Dgraft.d12.indexDir=<dir> remains the registered query's
-    // entry-point switch (the driver has no other channel); everything
-    // else goes through the explicit d12Build parameter.
-    d12Build(s, d, sys.props.get("graft.d12.indexDir"))
+    d12Build(s, d, None)
   }
 
   /** The corpus-side near-dup INDEX d12 (and its streaming ingest
@@ -1466,7 +1462,7 @@ object Dedup {
     * probe table, partitioned by band; `shingles/` — the (corpus_id,
     * sh_c) exact-verification sets, so a probe never re-tokenizes the
     * corpus either. The w06 query drives the write/append admission
-    * cycle; d12's -Dgraft.d12.indexDir mode and DedupSpec read it
+    * cycle; [[d12Build]]'s stored-index mode and DedupSpec read it
     * back. Mode is "overwrite" for the initial build, "append" per
     * admitted batch. */
   def writeNearDupIndex(corpus: DataFrame, dest: String,
@@ -1474,7 +1470,7 @@ object Dedup {
     val s = corpus.sparkSession
     import s.implicits._
     // the two legs write DISTINCT dirs off independent job chains —
-    // wall is max not sum (guide §2.6, the writeLexIndex precedent)
+    // wall is max not sum (guide §2.6, the writeLexIndexV2 precedent)
     graft.sources.Writers.inFlight(
       spread(corpus).select($"doc_id".as("corpus_id"),
           shingleSet($"text").as("sh_c"))

@@ -1400,6 +1400,16 @@ object Similarity {
     * uncapped ranking + work reduction). */
   val S11LexDfCap = 50
 
+  /** The bucket count B of every registered stored lexical index
+    * ([[graft.sources.Writers.writeLexIndexV2]]'s layout: w12–w14,
+    * st20, st24, st26, st28, dq06) — layout-physical only: every
+    * answer and every oracle count is B-independent (st28's planted
+    * rows land at `gb = B`, outside `pmod`'s [0, B) range, so EVERY
+    * planted row misbuckets whatever B is). Kept small: at sf0.01 the
+    * posting set is kilobytes, and pruning observability at scale is
+    * ScaleStressSpec's measured job, not the oracle's. */
+  val LexBuckets = 16
+
   /** The capped lexical retrieval CTE chain (through `lex5`) — shares
     * d04's tokenization text so the shingle definition cannot drift
     * from the dedup family's. */
@@ -1430,7 +1440,7 @@ object Similarity {
     * frequency ≤ cap; `sizes` — (doc_id, n) per-doc capped set sizes,
     * counted over the SAME capped postings so the Jaccard measure
     * stays consistent. Built inline here; PERSISTED by w12 through
-    * [[graft.sources.Writers.writeLexIndex]] — the w06/w07 index
+    * [[graft.sources.Writers.writeLexIndexV2]] — the w06/w07 index
     * lifecycle applied to the hybrid stack's lexical leg (round-11
     * verdict ask #2): a serving endpoint reads this back instead of
     * re-tokenizing the corpus per run. */
@@ -1485,7 +1495,7 @@ object Similarity {
   }
 
   /** The lexical probe with the QUERY postings explicit — (q_id, g)
-    * rows — so the stored-index path (w12/s11's -D switch) and the
+    * rows — so the stored-index path (w12's [[s11Build]]) and the
     * streaming serve twin (st20) probe with each batch's queries
     * against an index in [[lexIndex]]'s shape. Returns
     * (q_id, doc_id, lrk). */
@@ -1567,9 +1577,9 @@ object Similarity {
     * fuse join's inputs are top-5 lists — k rows per query, broadcast
     * class if the query set is small, plain shuffle join otherwise.
     * A serving endpoint does NOT rebuild the lexical index per run:
-    * w12 persists it and `-Dgraft.s11.lexIndexDir` (or [[s11Build]]'s
-    * explicit parameter) serves from the stored postings — proven
-    * stored≡inline by w12 riding this exact oracle string. */
+    * w12 persists it and [[s11Build]]'s explicit index parameter
+    * serves from the stored postings — proven stored≡inline by w12
+    * riding this exact oracle string. */
   val s11HybridRrf: Q = Q(
     "s11_hybrid_rrf",
     s"""WITH $LexTopkCtes,
@@ -1586,13 +1596,7 @@ object Similarity {
       |    row_number() OVER (PARTITION BY q_id
       |      ORDER BY rrf0 DESC, id) AS rk
       |  FROM fused)
-      |WHERE rk <= 3""".stripMargin) { (s, d) =>
-    // -Dgraft.s11.lexIndexDir=<dir> is the registered query's stored-
-    // lexical-index switch (d12's entry-point pattern — the driver has
-    // no other channel); everything else threads the explicit
-    // [[s11Build]] parameter.
-    s11Build(s, d, sys.props.get("graft.s11.lexIndexDir"))
-  }
+      |WHERE rk <= 3""".stripMargin) { (s, d) => s11Build(s, d, None) }
 
   /** s11's build with the LEXICAL index source explicit (d12Build's
     * pattern): None = build the df-capped inverted index from the
@@ -1862,10 +1866,13 @@ object Similarity {
     *     pruned read is exact and shingles outside the query never
     *     join; N/avgdl ride the (never-bucketed, one-row-per-doc)
     *     sizes leg whole.
-    *   - v1 (no stamp): the full-posting read, byte-identical to the
-    *     pre-v2 serve.
+    *   - no stamp: the full-posting read. Every other writer stamps its
+    *     index, so an unstamped dir is st22's probe-routed chain
+    *     ([[graft.sources.Writers.writeLexIndexLeg]]), whose `inqg`
+    *     routing is frozen to the REINDEX-time query set — an
+    *     arbitrary query may reach outside it, so nothing prunes.
     *
-    * SqlParitySpec pins v2 == v1 == inline `bm25_topk` row-identically
+    * SqlParitySpec pins v2 == inline `bm25_topk` row-identically
     * through real write/read cycles; PlanSpec asserts the EXECUTED
     * scan's partition count. */
   def bm25ServeQueries(s: SparkSession, dir: String, qdocs: DataFrame,

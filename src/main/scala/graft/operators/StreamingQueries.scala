@@ -879,7 +879,7 @@ object StreamingQueries {
     * cycle, completing the serving family (plain st16 / filtered st19
     * / hybrid st20 — the shape a production retrieval endpoint
     * actually runs): BOTH stored indexes are written once (the IVF
-    * index inside the cycle, the w12-layout lexical index in this
+    * index inside the cycle, the w12 lexical index in this
     * query's own scratch), then every micro-batch answers its queries'
     * lexical top-5 from the STORED postings, its vector top-5 from the
     * STORED lists, and fuses them with [[Similarity.rrfFuse]] — the
@@ -913,7 +913,8 @@ object StreamingQueries {
       val p0 = Similarity.lexIndex(Tables.documents(s, d))._1
         .localCheckpoint()
       val sz0 = p0.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-      Writers.writeLexIndex(p0, sz0, s"$lexBase/index")
+      Writers.writeLexIndexV2(p0, sz0, s"$lexBase/index",
+        Similarity.LexBuckets)
       val (pr, szr) =
         Writers.readLexIndex(s, s"$lexBase/index")
       (pr.localCheckpoint(), szr.localCheckpoint())
@@ -1034,7 +1035,7 @@ object StreamingQueries {
     * arrive as two streamed chunks. Each micro-batch (a) tokenizes ITS
     * OWN docs only, keeps the shingles in the frozen vocabulary, and
     * lands the batch's posting + size rows as a `leg=<batchId>`
-    * partition dir inside the w12 layout — overwritten per leg, so a
+    * partition dir of the probe-routed chain — overwritten per leg, so a
     * replayed batch rewrites its own leg deterministically
     * ([[Writers.writeLexIndexLeg]], the scd2 version-dir
     * discipline applied to index admission); then (b) SERVES the full
@@ -1105,7 +1106,7 @@ object StreamingQueries {
     * shingles, ROUTE each posting by frozen probe-set membership
     * (`inqg` — [[lexFreezeProbeSet]]; one g-keyed join per batch,
     * batch-side proportional), and land the batch's postings + sizes
-    * as leg `leg` inside the w12 layout — OVERWRITTEN on replay
+    * as leg `leg` of the routed chain — OVERWRITTEN on replay
     * ([[Writers.writeLexIndexLeg]]). Sizes count ALL
     * the doc's capped postings (routing must not perturb the length
     * terms). */
@@ -1430,7 +1431,7 @@ object StreamingQueries {
     Writers.freshScratch(s, base, "src")
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dest = s"$base/dest"; val idx = s"$base/index"
-    // WRITE once (w12's layout), serve only from the read-back form.
+    // WRITE once (w12's writer), serve only from the read-back form.
     // The capped postings are materialized ONCE before the two write
     // legs consume them (w12's lloyd() precedent): un-checkpointed,
     // the sizes write re-ran the whole tokenize + corpus-wide df
@@ -1440,7 +1441,7 @@ object StreamingQueries {
     val p0 = Similarity.lexIndex(Tables.documents(s, d))._1
       .localCheckpoint()
     val sz0 = p0.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    Writers.writeLexIndex(p0, sz0, idx)
+    Writers.writeLexIndexV2(p0, sz0, idx, Similarity.LexBuckets)
     val (pr, szr) = Writers.readLexIndex(s, idx)
     val statics = bm25ServeStatics(pr, szr)
     val queries = statics._1.select($"doc_id").distinct()
@@ -1559,10 +1560,11 @@ object StreamingQueries {
     * (st17), retention (st21) and a streaming fsck gate (st25), while
     * the serving indexes had admission (st22/st23), serving
     * (st16/st20/st24) and only BATCH audits (dq06/dq07). Here every
-    * admission leg is followed by the full four-check lexical-index
-    * audit of the artifact it just extended ([[graft.operators.Audit
-    * .lexAuditChecks]] — the exact plans dq06's oracle hash-verifies
-    * and `index_fsck` exposes to SQL).
+    * admission leg (st28's bucketed [[lexAdmitV2]] leg, through the
+    * shared [[lexAuditGate]] skeleton) is followed by the full
+    * four-check lexical-index audit of the artifact it just extended
+    * ([[graft.operators.Audit.lexAuditChecks]] — the exact plans
+    * dq06's oracle hash-verifies and `index_fsck` exposes to SQL).
     *
     * Two phases, one row per (phase, check):
     *   - stream_max: the MAX violations any per-leg audit saw — all
@@ -1590,38 +1592,8 @@ object StreamingQueries {
     * reindex pass. */
   val st26IndexAuditGate: Q = Q(
     "st26_index_audit_gate",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-      |              FROM documents),
-      |sh AS (SELECT DISTINCT doc_id,
-      |         t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-      |       FROM toks, LATERAL (SELECT unnest(range(1, len(t) - 1)) AS i) r),
-      |dfs AS (SELECT g, count(*) AS df FROM sh GROUP BY g),
-      |postings AS (SELECT s.doc_id, s.g FROM sh s JOIN dfs USING (g)
-      |             WHERE df <= ${Similarity.S11LexDfCap}),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM postings GROUP BY doc_id),
-      |vocab AS (SELECT DISTINCT g FROM postings),
-      |cur AS (SELECT doc_id,
-      |          CASE WHEN doc_id % ${Audit.AuditDriftMod} = ${Audit.AuditDriftRem}
-      |            THEN array_to_string((string_split(text, ' '))[1:20], ' ')
-      |            ELSE text END AS text
-      |        FROM documents WHERE doc_id % ${Audit.AuditDelMod} <> ${Audit.AuditDelRem}
-      |        UNION ALL
-      |        SELECT doc_id + ${Audit.AuditCopyOffset}, text FROM documents
-      |        WHERE doc_id % ${Audit.AuditCopyMod} = ${Audit.AuditCopyRem}),
-      |ctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM cur),
-      |csh AS (SELECT DISTINCT doc_id,
-      |          t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-      |        FROM ctoks, LATERAL (SELECT unnest(range(1, len(t) - 1)) AS i) r),
-      |recount AS (SELECT c.doc_id, count(*) AS n2
-      |            FROM csh c JOIN vocab USING (g) GROUP BY c.doc_id),
-      |missing AS (SELECT count(*) AS n FROM recount r
-      |            LEFT JOIN sizes s USING (doc_id) WHERE s.doc_id IS NULL),
-      |orph_d AS (SELECT count(*) AS n FROM sizes s
-      |           LEFT JOIN cur c USING (doc_id) WHERE c.doc_id IS NULL),
-      |orph_p AS (SELECT count(*) AS n FROM postings p
-      |           LEFT JOIN cur c USING (doc_id) WHERE c.doc_id IS NULL),
-      |drift AS (SELECT count(*) AS n FROM sizes s
-      |          JOIN recount r USING (doc_id) WHERE s.n <> r.n2)
+    s"""WITH cur AS (${Audit.auditCurSql(copies = true)}),
+      |${Audit.lexAuditCtes("documents", "cur")}
       |SELECT 'stream_max' AS phase, check_name,
       |  CAST(0 AS BIGINT) AS n_violations
       |FROM (VALUES ('missing_docs'), ('orphaned_docs'),
@@ -1634,35 +1606,55 @@ object StreamingQueries {
       |  CAST(n AS BIGINT) FROM orph_p
       |UNION ALL SELECT 'post_corruption', 'size_drift',
       |  CAST(n AS BIGINT) FROM drift""".stripMargin) { (s, d) =>
-    import s.implicits._
-    val base = Writers.scratchDir("st26", d)
+    // dq06's four checks over the stored index against corpus `cur`
+    def checks(idx: String, cur: org.apache.spark.sql.DataFrame) = {
+      val (pr, szr) = Writers.readLexIndex(s, idx)
+      Audit.lexAuditChecks(cur, pr, szr)
+    }
+    lexAuditGate(s, d, "st26")(
+      audit = checks,
+      // the corpus moves on WITHOUT a reindex: deletions, drift, and
+      // additions awaiting admission — the same shared constants the
+      // oracle text splices
+      corrupt = (idx, _) => checks(idx, movedCorpus(Tables.documents(s, d))))
+  }
+
+  /** st26/st28's gate skeleton: REINDEX the frozen vocabulary over the
+    * full corpus (st22's artifact), seed the stored v2 index with the
+    * pre-stream third and admit every streamed chunk as one
+    * [[lexAdmitV2]] leg under [[Similarity.LexBuckets]] — the same
+    * admission path for seed and stream. The gates differ only in
+    * `audit(idx, admittedSoFar)`, run after every commit, and
+    * `corrupt(idx, vocab)`, run once after the stream stops.
+    *
+    * writeTasks = 2 bounds each leg to ≤ 2×B files (the
+    * ScaleStressSpec leg-write precedent): unbounded, the vocab join's
+    * AQE output partitioning (~30 post-shuffle partitions at the 64k
+    * floor) crossed with partitionBy(gb) wrote 512 files PER LEG, and
+    * every per-commit audit re-opened all of them (round-19 profile:
+    * st28's audit read was file-open-bound, guide §6). */
+  private def lexAuditGate(s: org.apache.spark.sql.SparkSession, d: String,
+      tag: String)(
+      audit: (String, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame,
+      corrupt: (String, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val base = Writers.scratchDir(tag, d)
     val idx = s"$base/index"
     val docs = Tables.documents(s, d)
+    def admit(vocab: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame, leg: String): Unit =
+      lexAdmitV2(vocab, b, idx, leg, Similarity.LexBuckets,
+        writeTasks = Some(2))
     Streams.auditGate(s, base, DocSchema,
         admissionChunks(docs, "doc_id", "text"))({
-      // REINDEX over the full corpus (st22's artifacts), then seed the
-      // stored index with the pre-stream third through the same
-      // admission path the stream uses
       val vocab = lexFreezeVocab(s, docs, base)
-      val qg = lexFreezeProbeSet(s, docs, vocab, base)
-      lexAdmit(vocab, qg, docs.filter($"doc_id" % 3 === 0), idx, "base")
-      (vocab, qg)
+      admit(vocab, docs.filter(col("doc_id") % 3 === 0), "base")
+      vocab
     })(
-      admit = { case ((vocab, qg), b, id) =>
-        lexAdmit(vocab, qg, b, idx, id.toString) },
-      // the gate: audit the index THIS commit just extended, against
-      // exactly the corpus admitted so far
-      audit = { id =>
-        val (pr, szr) = Writers.readLexIndex(s, idx)
-        Audit.lexAuditChecks(admittedSoFar(docs, "doc_id", id), pr, szr)
-      },
-      corrupt = { _ =>
-        // the corpus moves on WITHOUT a reindex: deletions, drift, and
-        // additions awaiting admission — the same shared constants the
-        // oracle text splices
-        val (pr, szr) = Writers.readLexIndex(s, idx)
-        Audit.lexAuditChecks(movedCorpus(docs), pr, szr)
-      })
+      admit = (vocab, b, id) => admit(vocab, b, id.toString),
+      audit = id => audit(idx, admittedSoFar(docs, "doc_id", id)),
+      corrupt = vocab => corrupt(idx, vocab))
   }
 
   /** The two streamed admission chunks of the admission sites (st22,
@@ -1836,8 +1828,7 @@ object StreamingQueries {
     // writeTasks bounds the leg write's task count AFTER the vocab
     // join (the join re-shuffles, so an upstream repartition cannot —
     // round-18 review finding); the leg's file count is then
-    // ≤ writeTasks × buckets. None keeps the join's own partitioning
-    // (st28's per-commit shape; batches there are small).
+    // ≤ writeTasks × buckets. None keeps the join's own partitioning.
     val joined = Dedup.spread(batchDocs)
       .select(col("doc_id"),
         explode(Dedup.shingleSet(col("text"))).as("g"))
@@ -1849,14 +1840,6 @@ object StreamingQueries {
     Writers.writeLexIndexV2Leg(admitted, sizes, idx, leg,
       buckets)
   }
-
-  /** st28's bucket count — layout-physical only (the oracle's counts
-    * are B-independent: the corruption lands rows at `gb = B`, outside
-    * `pmod`'s [0, B) range, so EVERY planted row misbuckets no matter
-    * what B is). Kept small like w13's: at sf0.01 the posting set is
-    * kilobytes, and pruning observability at scale is ScaleStressSpec's
-    * measured job, not the oracle's. */
-  private[operators] val St28Buckets = 16
 
   /** st28: the CONTINUOUS V2-INDEX AUDIT — st26's per-commit-gate
     * shape on the g-hash-bucketed lexical layout (the round-17 verdict
@@ -1903,39 +1886,8 @@ object StreamingQueries {
     * join, one task-local bucketed write). */
   val st28LexV2AuditGate: Q = Q(
     "st28_lexv2_audit_gate",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-      |              FROM documents),
-      |sh AS (SELECT DISTINCT doc_id,
-      |         t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-      |       FROM toks, LATERAL (SELECT unnest(range(1, len(t) - 1)) AS i) r),
-      |dfs AS (SELECT g, count(*) AS df FROM sh GROUP BY g),
-      |postings AS (SELECT s.doc_id, s.g FROM sh s JOIN dfs USING (g)
-      |             WHERE df <= ${Similarity.S11LexDfCap}),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM postings GROUP BY doc_id),
-      |vocab AS (SELECT DISTINCT g FROM postings),
-      |cur AS (SELECT doc_id,
-      |          CASE WHEN doc_id % ${Audit.AuditDriftMod} = ${Audit.AuditDriftRem}
-      |            THEN array_to_string((string_split(text, ' '))[1:20], ' ')
-      |            ELSE text END AS text
-      |        FROM documents
-      |        WHERE doc_id % ${Audit.AuditDelMod} <> ${Audit.AuditDelRem}
-      |        UNION ALL
-      |        SELECT doc_id + ${Audit.AuditCopyOffset}, text FROM documents
-      |        WHERE doc_id % ${Audit.AuditCopyMod} = ${Audit.AuditCopyRem}),
-      |ctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM cur),
-      |csh AS (SELECT DISTINCT doc_id,
-      |          t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-      |        FROM ctoks, LATERAL (SELECT unnest(range(1, len(t) - 1)) AS i) r),
-      |recount AS (SELECT c.doc_id, count(*) AS n2
-      |            FROM csh c JOIN vocab USING (g) GROUP BY c.doc_id),
-      |missing AS (SELECT count(*) AS n FROM recount r
-      |            LEFT JOIN sizes s USING (doc_id) WHERE s.doc_id IS NULL),
-      |orph_d AS (SELECT count(*) AS n FROM sizes s
-      |           LEFT JOIN cur c USING (doc_id) WHERE c.doc_id IS NULL),
-      |orph_p AS (SELECT count(*) AS n FROM postings p
-      |           LEFT JOIN cur c USING (doc_id) WHERE c.doc_id IS NULL),
-      |drift AS (SELECT count(*) AS n FROM sizes s
-      |          JOIN recount r USING (doc_id) WHERE s.n <> r.n2),
+    s"""WITH cur AS (${Audit.auditCurSql(copies = true)}),
+      |${Audit.lexAuditCtes("documents", "cur")},
       |misb AS (SELECT count(*) AS n FROM postings
       |         WHERE doc_id % ${Audit.AuditCopyMod} = ${Audit.AuditCopyRem})
       |SELECT 'stream_max' AS phase, check_name,
@@ -1954,33 +1906,11 @@ object StreamingQueries {
       |UNION ALL SELECT 'post_corruption', 'misbucketed_postings',
       |  CAST(n AS BIGINT) FROM misb""".stripMargin) { (s, d) =>
     import s.implicits._
-    val base = Writers.scratchDir("st28", d)
-    val idx = s"$base/index"
     val docs = Tables.documents(s, d)
-    Streams.auditGate(s, base, DocSchema,
-        admissionChunks(docs, "doc_id", "text"))({
-      // REINDEX over the full corpus (st22's frozen-vocab artifact),
-      // then seed the stored v2 index with the pre-stream third through
-      // the same admission path the stream uses
-      val vocab = lexFreezeVocab(s, docs, base)
-      // writeTasks bounds each leg to ≤ 2×B files (the ScaleStressSpec
-      // leg-write precedent): unbounded, the vocab join's AQE output
-      // partitioning (~30 post-shuffle partitions at the 64k floor)
-      // crossed with partitionBy(gb) wrote 512 files PER LEG, and every
-      // per-commit five-check audit re-opened all of them (round-19
-      // profile: st28's audit read was file-open-bound, guide §6)
-      lexAdmitV2(vocab, docs.filter($"doc_id" % 3 === 0), idx, "base",
-        St28Buckets, writeTasks = Some(2))
-      vocab
-    })(
-      admit = (vocab, b, id) => lexAdmitV2(vocab, b, idx, id.toString,
-        St28Buckets, writeTasks = Some(2)),
-      // the gate: the stamp-dispatched five-check audit of the index
-      // THIS commit just extended, against exactly the corpus admitted
-      // so far
-      audit = id => Audit.lexIndexAuditChecks(s, idx,
-        admittedSoFar(docs, "doc_id", id)),
-      corrupt = { vocab =>
+    lexAuditGate(s, d, "st28")(
+      // the gate: the stamp-dispatched five-check audit
+      audit = Audit.lexIndexAuditChecks(s, _, _),
+      corrupt = { (idx, vocab) =>
         // st26's corpus motion (shared constants) PLUS the v2-specific
         // physical corruption: the awaiting additions hand-backfilled
         // as raw posting rows cp-ed into a bucket dir their shingles do
@@ -1992,7 +1922,8 @@ object StreamingQueries {
             explode(Dedup.shingleSet($"text")).as("g"))
           .join(vocab, "g")
           .select($"g", $"doc_id")
-          .write.parquet(s"$idx/postings/leg=corrupt/gb=$St28Buckets")
+          .write.parquet(
+            s"$idx/postings/leg=corrupt/gb=${Similarity.LexBuckets}")
         Audit.lexIndexAuditChecks(s, idx, movedCorpus(docs))
       })
   }

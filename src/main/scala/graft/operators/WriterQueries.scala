@@ -234,7 +234,7 @@ object WriterQueries {
     * probes shuffle only the BATCH's band rows, and verification joins
     * only CANDIDATE shingle rows. DedupSpec additionally proves d12
     * itself reproduces its inline answer when re-pointed at this
-    * stored index via -Dgraft.d12.indexDir. */
+    * stored index through [[Dedup.d12Build]]. */
   val w06BandIndex: Q = Q(
     "w06_band_index", Dedup.d12OracleSql) { (s, d) =>
     import s.implicits._
@@ -1106,22 +1106,24 @@ object WriterQueries {
   }
 
   /** Where w12 materializes the stored lexical index for fixture `d` —
-    * public so a consumer pointing `-Dgraft.s11.lexIndexDir` at w12's
-    * output can locate the real layout instead of re-deriving the
-    * scratch convention (annIndexDir's precedent; the spec and st20
-    * deliberately build their OWN index dirs to stay independent of
-    * w12's run order). */
+    * public so a consumer serving w12's output through
+    * [[Similarity.s11Build]] can locate the real layout instead of
+    * re-deriving the scratch convention (annIndexDir's precedent; the
+    * spec and st20 deliberately build their OWN index dirs to stay
+    * independent of w12's run order). */
   def lexIndexDir(d: String): String =
     s"${Writers.scratchDir("wq", d)}/lex_index"
 
   /** w12: the PERSISTED df-capped lexical inverted index — w06/w07's
     * index lifecycle applied to the hybrid retrieval stack's keyword
     * leg (round-11 verdict ask #2): BUILD the capped postings + sizes
-    * once ([[Similarity.lexIndex]]), WRITE them in two legs (initial
-    * write + an APPEND under the frozen df cap — the d12/w06 admission
-    * cycle; the cap is a corpus statistic, so production recomputes it
-    * on reindex, not per admitted batch), then SERVE the full s11
-    * hybrid query with its lexical leg reading ONLY the stored index.
+    * once ([[Similarity.lexIndex]]), WRITE them in two stamped
+    * bucketed legs (initial write + an APPEND under the frozen df cap
+    * and the same B — the d12/w06 admission cycle; the cap is a corpus
+    * statistic, so production recomputes it on reindex, not per
+    * admitted batch), then SERVE the full s11 hybrid query with its
+    * lexical leg reading ONLY the stored index (the whole of it: s11's
+    * query slice spans the vocabulary, so nothing prunes).
     *
     * Oracle: s11's SQL VERBATIM — the stored-index answer must be
     * row-identical to the inline-index answer, so a posting lost,
@@ -1149,18 +1151,17 @@ object WriterQueries {
     val postings = Similarity.lexIndex(Tables.documents(s, d))._1
       .localCheckpoint()
     val sizes = postings.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    Writers.writeLexIndex(postings.filter($"doc_id" % 2 === 0),
-      sizes.filter($"doc_id" % 2 === 0), dest)
-    Writers.writeLexIndex(postings.filter($"doc_id" % 2 === 1),
-      sizes.filter($"doc_id" % 2 === 1), dest,
+    Writers.writeLexIndexV2(postings.filter($"doc_id" % 2 === 0),
+      sizes.filter($"doc_id" % 2 === 0), dest, Similarity.LexBuckets)
+    Writers.writeLexIndexV2(postings.filter($"doc_id" % 2 === 1),
+      sizes.filter($"doc_id" % 2 === 1), dest, Similarity.LexBuckets,
       org.apache.spark.sql.SaveMode.Append)
     Similarity.s11Build(s, d, Some(dest))
   }
 
-  /** Where w13 materializes the v2 (g-hash-bucketed) lexical index
-    * for fixture `d` — [[lexIndexDir]]'s convention for the layout
-    * revision, kept separate so w12's v1 artifact and w13's v2
-    * artifact can coexist in one run. */
+  /** Where w13 materializes its lexical index for fixture `d` —
+    * [[lexIndexDir]]'s convention, kept separate so w12's and w13's
+    * artifacts can coexist in one run. */
   def lexIndexV2Dir(d: String): String =
     s"${Writers.scratchDir("wq", d)}/lex_index_v2"
 
@@ -1198,9 +1199,9 @@ object WriterQueries {
       .localCheckpoint()
     val sizes = postings.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     Writers.writeLexIndexV2(postings.filter($"doc_id" % 2 === 0),
-      sizes.filter($"doc_id" % 2 === 0), dest, buckets = 16)
+      sizes.filter($"doc_id" % 2 === 0), dest, Similarity.LexBuckets)
     Writers.writeLexIndexV2(postings.filter($"doc_id" % 2 === 1),
-      sizes.filter($"doc_id" % 2 === 1), dest, buckets = 16,
+      sizes.filter($"doc_id" % 2 === 1), dest, Similarity.LexBuckets,
       org.apache.spark.sql.SaveMode.Append)
     Similarity.bm25ServeQueries(s, dest,
       Tables.documents(s, d).filter($"doc_id" % 50 === 0))
@@ -1248,7 +1249,7 @@ object WriterQueries {
       Writers.writeLexIndexV2Leg(
         postings.filter($"doc_id" % 3 === k).coalesce(2),
         sizes.filter($"doc_id" % 3 === k).coalesce(2), src, k.toString,
-        buckets = 16)
+        Similarity.LexBuckets)
     }
     Writers.compactIndex(s, src, dest)
     Similarity.bm25ServeQueries(s, dest,

@@ -53,7 +53,9 @@ object TableFsckTvf {
   * }}}
   *
   * Returns one row per check (check_name, n_violations), all zeros on
-  * a healthy index — [[graft.operators.Audit.lexAuditChecks]] /
+  * a healthy index — [[graft.operators.Audit.lexIndexAuditChecks]]
+  * (five checks on a stamped v2 index, the four base checks through
+  * the full read on the one unstamped layout, st22's routed chain) /
   * [[graft.operators.Audit.ivfAuditChecks]]'s plans verbatim, the
   * exact arithmetic dq06/dq07's DuckDB oracles hash-verify, so the
   * SQL surface cannot drift from the audited checks. SqlParitySpec
@@ -83,7 +85,8 @@ object IndexFsckTvf {
       // four base checks + the v2 bucket-integrity check when stamped —
       // ONE dispatch definition shared with st28's per-commit gate
       // (a misbucketed posting is invisible to every pruned serve that
-      // should have scored it)
+      // should have scored it); an unstamped dir is st22's routed
+      // chain, audited through the full read with the four checks
       graft.operators.Audit.lexIndexAuditChecks(s, dir, corpus)
     } else {
       import org.apache.spark.sql.functions.col

@@ -250,11 +250,11 @@ object KnnTopkTvf {
   * `pmod(hash(g), B)` bucket ids pushed as a literal partition
   * filter, ≤ min(B, |query shingles|) of B partitions read instead
   * of the whole posting set (PlanSpec asserts the EXECUTED scan's
-  * partition metrics; SqlParitySpec pins v2 == v1 == inline
-  * row-identity). A v1 index (no `_graft_layout` stamp) keeps the
-  * full-posting read byte-identically — the w12 layout's `inqg`
-  * routing is frozen to the REINDEX-time query set, and an arbitrary
-  * query may reach outside it, so nothing prunes there. */
+  * partition metrics; SqlParitySpec pins v2 == inline row-identity).
+  * An unstamped index is st22's probe-routed chain, served through
+  * the full-posting read — its `inqg` routing is frozen to the
+  * REINDEX-time query set, and an arbitrary query may reach outside
+  * it, so nothing prunes there. */
 object Bm25ServeTvf {
 
   val identifier: FunctionIdentifier = FunctionIdentifier("bm25_serve")
@@ -274,8 +274,8 @@ object Bm25ServeTvf {
       // explicit query view or free text: the shared serve path
       // (Similarity.bm25ServeQueries) — on a v2-stamped index it
       // snapshots the query shingles once and read-prunes the stored
-      // postings to their g-hash buckets; on a v1 index it is the
-      // byte-identical full read
+      // postings to their g-hash buckets; on st22's unstamped routed
+      // chain it is the full read
       case Some(q) => sim.bm25ServeQueries(s, names.head, q,
         k.getOrElse(5))
       // default corpus slice: queries are index docs, whose shingles

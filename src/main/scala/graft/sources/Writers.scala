@@ -240,32 +240,12 @@ object Writers {
     spark.read.parquet(s"$dest/centroids").select("c_id", "c_vec", "c_nrm"),
     spark.read.parquet(s"$dest/lists").select("vec_id", "c_id"))
 
-  /** The persisted LEXICAL inverted-index layout (w12) — the hybrid
-    * retrieval stack's keyword leg: `dest/postings` holds the
-    * (g, doc_id) df-capped posting rows (sorted within partitions by
-    * shingle so a probe join scans contiguous runs), `dest/sizes` the
-    * (doc_id, n) capped set sizes. ONE write path shared by w12 and
-    * st20's serve cycle (the writeIvfIndex discipline), so the stored
-    * and served layouts cannot drift. The df cap is computed over the
-    * FULL corpus before any write leg — appending a batch's rows under
-    * the frozen cap is the d12/w06 admission shape. */
-  def writeLexIndex(postings: DataFrame, sizes: DataFrame, dest: String,
-      mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
-    inFlight(
-        sizes.select("doc_id", "n").write.mode(mode).parquet(s"$dest/sizes")) {
-      _ => postings.select("g", "doc_id").sortWithinPartitions("g")
-        .write.mode(mode).parquet(s"$dest/postings")
-    }
-  }
-
-  /** Read the stored lexical index back in the probe-side shapes
-    * ([[writeLexIndex]]'s layout contract, one reader for it). Also
-    * reads a [[writeLexIndexLeg]] tree unchanged — the `leg` partition
-    * column is projected away by the explicit selects — and a
-    * [[writeLexIndexV2]] tree unchanged for the same reason (`gb` is
-    * a partition column), so v1 consumers of a v2 index stay
-    * byte-identical; only pruning readers dispatch on the stamp
-    * ([[lexLayoutOf]]). */
+  /** Read a stored lexical index back in the probe-side shapes —
+    * (g, doc_id) postings and (doc_id, n) sizes — whole. Reads every
+    * lexical tree unchanged: the `leg`, `gb` and `inqg`/`insz`
+    * partition columns are projected away by the explicit selects, so
+    * full-read consumers never dispatch on the layout; only pruning
+    * readers consult the stamp ([[lexLayoutOf]]). */
   def readLexIndex(spark: SparkSession, dest: String)
       : (DataFrame, DataFrame) = (
     spark.read.parquet(s"$dest/postings").select("g", "doc_id"),
@@ -273,9 +253,10 @@ object Writers {
 
   /** The v2 lexical layout's stamp file name — lives directly in the
     * index dir (a sibling of `postings/` and `sizes/`), carrying the
-    * layout version and the bucket count B. Its PRESENCE is the
-    * dispatch: v1 indexes have no stamp and keep serving
-    * byte-identically through [[readLexIndex]]; a v2 index's readers
+    * layout version and the bucket count B. Every lexical index is
+    * stamped except st22's probe-routed chain ([[writeLexIndexLeg]]),
+    * so its ABSENCE names that chain: readers serve it through the
+    * full read ([[readLexIndex]]), while a stamped index's readers
     * consult the stamp for B so a serve can prune buckets. */
   private val LexLayoutFile = "_graft_layout"
 
@@ -290,9 +271,10 @@ object Writers {
   }
 
   /** The stored lexical index's bucket count, if it declares the v2
-    * g-hash-bucketed layout (None = v1 flat postings). Loud on a
-    * stamp this code doesn't understand — serving a future layout
-    * through v2 pruning rules could silently drop rows. */
+    * g-hash-bucketed layout (None = st22's unstamped routed chain,
+    * [[writeLexIndexLeg]]). Loud on a stamp this code doesn't
+    * understand — serving a future layout through v2 pruning rules
+    * could silently drop rows. */
   def lexLayoutOf(spark: SparkSession, dest: String): Option[Int] = {
     val (fs, p) = fsOf(spark, dest)
     val f = new org.apache.hadoop.fs.Path(p, LexLayoutFile)
@@ -311,10 +293,37 @@ object Writers {
     }
   }
 
+  /** The flat `postings/gb=` ([[writeLexIndexV2]]) and legged
+    * `postings/leg=<id>/gb=` ([[writeLexIndexV2Leg]]) v2 layouts are
+    * MUTUALLY EXCLUSIVE per index dir — mixed partition depths break
+    * Spark's partition discovery at read time, far from the write
+    * that caused it — and an EXISTING UNSTAMPED tree must never be
+    * adopted by stamping over it (st22's routed tree stamped v2
+    * would dispatch every pruned serve onto a layout with no gb
+    * dirs). [[requireListLayout]]'s fail-fast-at-the-write
+    * discipline, lexical side (round-18 review finding). */
+  private def requireLexV2Layout(spark: SparkSession, dest: String,
+      legged: Boolean): Unit = {
+    val (fs, p) = fsOf(spark, s"$dest/postings")
+    if (fs.exists(p)) {
+      require(lexLayoutOf(spark, dest).isDefined,
+        s"$dest/postings exists without a _graft_layout stamp — an " +
+          "unstamped (routed) tree cannot be adopted as v2 by writing " +
+          "into it; rebuild it through the v2 writers instead")
+      val offending = fs.listStatus(p).map(_.getPath.getName)
+        .filter(_.startsWith(if (legged) "gb=" else "leg="))
+      require(offending.isEmpty,
+        s"$dest/postings already holds " +
+          s"${if (legged) "flat gb=" else "leg="} dirs " +
+          s"(e.g. ${offending.head}); flat writeLexIndexV2 and legged " +
+          "writeLexIndexV2Leg layouts cannot mix under one index")
+    }
+  }
+
   /** The V2 persisted lexical layout (round-17 verdict ask #1): the
-    * same (g, doc_id) postings + (doc_id, n) sizes as
-    * [[writeLexIndex]], with the postings HASH-BUCKETED by shingle —
-    * directory-partitioned on `gb = pmod(hash(g), B)` — so an
+    * (g, doc_id) postings + (doc_id, n) sizes of every stored lexical
+    * index but st22's routed chain, with the postings HASH-BUCKETED by
+    * shingle — directory-partitioned on `gb = pmod(hash(g), B)` — so an
     * ARBITRARY query's shingles name their buckets at plan build and
     * a serve reads ≤ min(B, |distinct query shingles|) partitions
     * instead of the whole posting set (the knn_serve probed-cell
@@ -330,7 +339,7 @@ object Writers {
     * files; with it the file count is ~B, each ~one target partition)
     * then sorted (gb, g) within tasks — hash collisions can co-locate
     * buckets in one task, and the sort keeps the w02 one-open-writer
-    * discipline plus v1's g-order within buckets. The shuffle is a
+    * discipline plus g-order within buckets. The shuffle is a
     * REINDEX-time cost, amortized over every serve. The dir is stamped
     * `_graft_layout` (layout=2, buckets=B); appends under an existing
     * stamp must carry the SAME B — a second producer bucketing by a
@@ -343,34 +352,6 @@ object Writers {
     * usual ~128 MB rule — a 1 TB posting set wants B ≈ 8000, so a
     * 100-shingle query reads ~1.2 % of it). B too small prunes
     * nothing; too large makes tiny files. */
-  /** The flat `postings/gb=` ([[writeLexIndexV2]]) and legged
-    * `postings/leg=<id>/gb=` ([[writeLexIndexV2Leg]]) v2 layouts are
-    * MUTUALLY EXCLUSIVE per index dir — mixed partition depths break
-    * Spark's partition discovery at read time, far from the write
-    * that caused it — and an EXISTING UNSTAMPED tree must never be
-    * adopted by stamping over it (a v1 flat or routed tree stamped v2
-    * would dispatch every pruned serve onto a layout with no gb
-    * dirs). [[requireListLayout]]'s fail-fast-at-the-write
-    * discipline, lexical side (round-18 review finding). */
-  private def requireLexV2Layout(spark: SparkSession, dest: String,
-      legged: Boolean): Unit = {
-    val (fs, p) = fsOf(spark, s"$dest/postings")
-    if (fs.exists(p)) {
-      require(lexLayoutOf(spark, dest).isDefined,
-        s"$dest/postings exists without a _graft_layout stamp — an " +
-          "unstamped (v1) tree cannot be adopted as v2 by writing into " +
-          "it; rebuild it through the v2 writers (or compactIndex) " +
-          "instead")
-      val offending = fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith(if (legged) "gb=" else "leg="))
-      require(offending.isEmpty,
-        s"$dest/postings already holds " +
-          s"${if (legged) "flat gb=" else "leg="} dirs " +
-          s"(e.g. ${offending.head}); flat writeLexIndexV2 and legged " +
-          "writeLexIndexV2Leg layouts cannot mix under one index")
-    }
-  }
-
   def writeLexIndexV2(postings: DataFrame, sizes: DataFrame,
       dest: String, buckets: Int,
       mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
@@ -401,7 +382,7 @@ object Writers {
     * version-dir discipline all admission legs share). All legs must
     * carry the index's stamped B — enforced here exactly like
     * [[writeLexIndexV2]]'s append path — and v2 legs are mutually
-    * exclusive with the v1 `inqg`-routed legs per index dir (mixed
+    * exclusive with st22's `inqg`-routed legs per index dir (mixed
     * partition depths break discovery). The per-leg write is
     * task-local (a batch is admission-sized; the reindex-scale
     * gb shuffle would cost more than the leg), so legs produce more,
@@ -447,25 +428,25 @@ object Writers {
     * flat layout at `dest` — the OPTIMIZE pass (w03/w09's maintenance
     * family) applied to the index artifacts: admission legs
     * deliberately trade file count for replay-idempotent commits
-    * ([[writeLexIndexLeg]] / [[writeLexIndexV2Leg]] /
-    * [[appendIvfListsLeg]] each land a batch's rows as that leg's own
-    * files, so a 100-leg chain's serve pays a 100-leg listing — the
+    * ([[writeLexIndexV2Leg]] / [[appendIvfListsLeg]] each land a
+    * batch's rows as that leg's own files, so a 100-leg chain's serve
+    * pays a 100-leg listing — the
     * documented trade), and this pass re-lands the whole artifact in
     * the one-writer-per-partition shape the reindex writers produce.
     *
     * Dispatch mirrors `index_fsck`'s: the dir's own structure names
-    * the family (postings/ + sizes/ vs centroids/ + lists/), and the
-    * lexical side additionally dispatches on the `_graft_layout`
-    * stamp — a v2 tree re-compacts through [[writeLexIndexV2]] under
-    * its STAMPED B (the pruning modulus is data, not layout freedom:
-    * changing B at compaction would orphan every bucket id a serve
-    * derives from the stamp). Compacts into a NEW dir (the w03
-    * src→dest shape): an in-place rewrite would torn-read a
-    * concurrent serve; the caller swaps directories on its own
-    * cadence. ROUTED v1 legs (st22's `inqg` partition dirs) are
+    * the family (postings/ + sizes/ vs centroids/ + lists/), and a
+    * lexical tree must carry the `_graft_layout` stamp: it
+    * re-compacts through [[writeLexIndexV2]] under its STAMPED B (the
+    * pruning modulus is data, not layout freedom: changing B at
+    * compaction would orphan every bucket id a serve derives from the
+    * stamp). Compacts into a NEW dir (the w03 src→dest shape): an
+    * in-place rewrite would torn-read a concurrent serve; the caller
+    * swaps directories on its own cadence. The one unstamped lexical
+    * tree is st22's ROUTED chain ([[writeLexIndexLeg]]), and it is
     * REFUSED loudly — the routing flag rides the reindex-time frozen
     * probe set, an artifact of the admission harness, not of the
-    * index dir, so those trees recompact at the reindex cadence that
+    * index dir, so that tree recompacts at the reindex cadence that
     * owns the probe set.
     *
     * Deliberately NOT a SQL TVF: the repo's TVF side-effect
@@ -496,22 +477,17 @@ object Writers {
     def filesOf(dir: String): Long =
       spark.read.parquet(dir).inputFiles.length.toLong
     if (isLex) {
-      require(!spark.read.parquet(s"$src/postings").columns.contains("inqg"),
-        s"compactIndex: $src holds ROUTED legs (inqg dirs — st22's " +
-          "frozen-probe-set admission shape); the routing flag is the " +
-          "admission harness's reindex artifact, not the index dir's, " +
-          "so routed trees recompact at the reindex cadence")
+      val b = lexLayoutOf(spark, src)
+      require(b.isDefined,
+        s"compactIndex: $src has no _graft_layout stamp, so it holds " +
+          "st22's ROUTED legs (the frozen-probe-set admission shape); " +
+          "the routing flag is the admission harness's reindex " +
+          "artifact, not the index dir's, so routed trees recompact at " +
+          "the reindex cadence")
       val filesBefore = filesOf(s"$src/postings") + filesOf(s"$src/sizes")
       val (p, sz) = readLexIndex(spark, src)
-      lexLayoutOf(spark, src) match {
-        // v2: writeLexIndexV2's own gb shuffle is the compaction (~B
-        // files); v1: one shuffle on g so a shingle's run lands in one
-        // file (probe locality), AQE sizes the partition count
-        case Some(b) => writeLexIndexV2(p, sz.repartition(col("doc_id")),
-          dest, b)
-        case None => writeLexIndex(p.repartition(col("g")),
-          sz.repartition(col("doc_id")), dest)
-      }
+      // writeLexIndexV2's own gb shuffle is the compaction (~B files)
+      writeLexIndexV2(p, sz.repartition(col("doc_id")), dest, b.get)
       val filesAfter = filesOf(s"$dest/postings") + filesOf(s"$dest/sizes")
       val rows = spark.read.parquet(s"$dest/postings").count()
       spark.createDataFrame(Seq(("lexical", rows, filesBefore, filesAfter)))
@@ -529,47 +505,39 @@ object Writers {
     }
   }
 
-  /** One ADMISSION leg of the lexical index (st22's streaming
-    * admission): the batch's capped posting + size rows land as
-    * `leg=<id>` partition dirs inside the [[writeLexIndex]] layout,
-    * OVERWRITTEN per leg — a replayed micro-batch rewrites its own leg
-    * deterministically instead of double-appending (the scd2
-    * version-dir discipline applied to index admission; a bare
-    * SaveMode.Append would double the batch's postings on replay).
-    * [[readLexIndex]] reads the whole tree unchanged.
+  /** One ADMISSION leg of st22's PROBE-ROUTED lexical chain — the
+    * only lexical layout without the v2 stamp: the batch's capped
+    * (g, doc_id, inqg) posting rows and (doc_id, n, insz) size rows
+    * land as `leg=<id>` partition dirs, OVERWRITTEN per leg — a
+    * replayed micro-batch rewrites its own leg deterministically
+    * instead of double-appending (the scd2 version-dir discipline
+    * applied to index admission; a bare SaveMode.Append would double
+    * the batch's postings on replay). [[readLexIndex]] reads the
+    * whole tree unchanged.
     *
-    * When `postings` carries an `inqg` column (0/1: is the shingle in
-    * the frozen probe-reachable g-set — st22's serve pruning), the leg
-    * is ADDITIONALLY partitioned by it, so a serve reads only the
-    * `inqg=1` dirs ([[readLexIndexProbed]]) — the lexical twin of the
-    * IVF probed-cell partition pruning. Routed and unrouted legs are
+    * Inside each leg the rows are ADDITIONALLY partitioned by their
+    * routing flags — `inqg` (is the shingle in the frozen
+    * probe-reachable g-set) and `insz` (has the doc ≥1 such posting;
+    * after the postings prune, an unpruned sizes read would DOMINATE
+    * the serve bill) — so a serve reads only the `=1` dirs
+    * ([[readLexIndexProbed]]), the lexical twin of the IVF probed-cell
+    * partition pruning. Routed legs and the stamped v2 layout are
     * mutually exclusive per index dir (mixed partition depths break
-    * discovery); every producer for one index must pass the same
-    * shape. */
+    * discovery at read time), so a stamped dir is refused here, at
+    * the write — [[requireLexV2Layout]] guards the reverse. */
   def writeLexIndexLeg(postings: DataFrame, sizes: DataFrame,
       dest: String, leg: String): Unit = {
-    val routed = postings.columns.contains("inqg")
-    // sizes route by `insz` (doc has >=1 probe-reachable posting) the
-    // same way — after the postings prune, an unpruned sizes read
-    // would DOMINATE the serve bill (one row per admitted doc vs the
-    // probe-reachable posting slice)
-    val szRouted = sizes.columns.contains("insz")
+    require(lexLayoutOf(postings.sparkSession, dest).isEmpty,
+      s"$dest is stamped _graft_layout=2; routed writeLexIndexLeg legs " +
+        "and the v2 bucketed layout cannot mix under one index")
     // distinct dirs, independent chains off the caller's checkpointed
     // batch — overlapped like every other index writer (guide §2.6)
-    inFlight {
-      val sw = sizes
-        .select((if (szRouted) Seq("doc_id", "n", "insz")
-                 else Seq("doc_id", "n")).map(sizes.col): _*)
-        .write.mode(SaveMode.Overwrite)
-      (if (szRouted) sw.partitionBy("insz") else sw)
-        .parquet(s"$dest/sizes/leg=$leg")
-    } { _ =>
-      val w = postings
-        .select((if (routed) Seq("g", "doc_id", "inqg")
-                 else Seq("g", "doc_id")).map(postings.col): _*)
+    inFlight(sizes.select("doc_id", "n", "insz")
+        .write.mode(SaveMode.Overwrite).partitionBy("insz")
+        .parquet(s"$dest/sizes/leg=$leg")) { _ =>
+      postings.select("g", "doc_id", "inqg")
         .sortWithinPartitions("g")
-        .write.mode(SaveMode.Overwrite)
-      (if (routed) w.partitionBy("inqg") else w)
+        .write.mode(SaveMode.Overwrite).partitionBy("inqg")
         .parquet(s"$dest/postings/leg=$leg")
     }
   }

@@ -58,10 +58,11 @@ class AuditSpec extends AnyFunSuite {
     sources.Writers.freshScratch(spark, base)
     val idx = s"$base/index"
     val docs = sources.Tables.documents(spark, sf)
+    // st26's own admission path: v2 legs under the shared B
     val vocab = sq.lexFreezeVocab(spark, docs, base)
-    val qg = sq.lexFreezeProbeSet(spark, docs, vocab, base)
-    sq.lexAdmit(vocab, qg, docs.filter($"doc_id" % 3 === 0), idx, "base")
-    sq.lexAdmit(vocab, qg, docs.filter($"doc_id" % 3 === 1), idx, "0")
+    val B = operators.Similarity.LexBuckets
+    sq.lexAdmitV2(vocab, docs.filter($"doc_id" % 3 === 0), idx, "base", B)
+    sq.lexAdmitV2(vocab, docs.filter($"doc_id" % 3 === 1), idx, "0", B)
     def gate(): Map[String, Long] = {
       val (pr, szr) = sources.Writers.readLexIndex(spark, idx)
       operators.Audit.lexAuditChecks(
@@ -277,8 +278,7 @@ class AuditSpec extends AnyFunSuite {
     // resolution never leaks later buckets backwards or loses carried
     // buckets forwards
     val wq = operators.WriterQueries
-    val dim = java.nio.file.Files
-      .createTempDirectory("graft_w10_asof").toString
+    val dim = tempDir("graft_w10_asof")
     val cutoff = "1997-01-01"; val horizon = "1997-07-01"
     val orders = sources.Tables.orders(spark, sf)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",
@@ -308,8 +308,7 @@ class AuditSpec extends AnyFunSuite {
       " served row") {
     import spark.implicits._
     val wq = operators.WriterQueries
-    val dim = java.nio.file.Files
-      .createTempDirectory("graft_w11_vac").toString
+    val dim = tempDir("graft_w11_vac")
     val cutoff = "1997-01-01"; val horizon = "1997-07-01"
     val orders = sources.Tables.orders(spark, sf)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",
@@ -442,8 +441,7 @@ class AuditSpec extends AnyFunSuite {
         === 7)
       .select($"vec_id".as("c_id"), $"embedding".as("c_vec"),
         $"nrm".as("c_nrm"))
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_dq07clean").toString
+    val idx = tempDir("graft_dq07clean")
     sources.Writers.freshScratch(spark, idx)
     sources.Writers.writeIvfIndex(cents,
       operators.Similarity.ivfAssignment(emb, cents), idx)
@@ -469,8 +467,7 @@ class AuditSpec extends AnyFunSuite {
     // positive after every sanctioned vacuum would page an operator on
     // every healthy table.
     import spark.implicits._
-    val dest = java.nio.file.Files
-      .createTempDirectory("graft_dq08clean").toString
+    val dest = tempDir("graft_dq08clean")
     sources.Writers.freshScratch(spark, dest)
     val cutoff = "1997-01-01"; val horizon = "1997-07-01"
     val orders = sources.Tables.orders(spark, sf)

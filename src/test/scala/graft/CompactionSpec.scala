@@ -40,7 +40,7 @@ class CompactionSpec extends AnyFunSuite {
       s"compaction did not reduce files: $filesBefore -> $filesAfter")
     // the stamp (and with it the pruning modulus) must ride along —
     // a compacted v2 index that lost its stamp would silently serve
-    // as v1 (full-scan) forever after
+    // full-scan forever after
     assert(sources.Writers.lexLayoutOf(spark, dest).contains(B),
       "compacted dir lost (or drifted) the _graft_layout stamp")
     // row-identical serve through the PRUNED stamped path
@@ -116,10 +116,12 @@ class CompactionSpec extends AnyFunSuite {
     // partition depths break discovery at READ time, far from the
     // write that caused it); the v2 lexical writers enforce the same
     // class — plus the adoption hole unique to the stamp dispatch: an
-    // unstamped v1 tree stamped v2 would route every pruned serve
-    // onto a layout with no gb dirs
+    // unstamped (st22 routed) tree stamped v2 would route every pruned
+    // serve onto a layout with no gb dirs — and the routed writer
+    // refuses the reverse, legs into a stamped tree
     val s = spark
     import s.implicits._
+    val sq = operators.StreamingQueries
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_v2_mix"
     sources.Writers.freshScratch(spark, base)
     val p = Seq(("a b c", 1L), ("b c d", 2L)).toDF("g", "doc_id")
@@ -137,17 +139,36 @@ class CompactionSpec extends AnyFunSuite {
         org.apache.spark.sql.SaveMode.Append)
     }
     assert(e2.getMessage.contains("cannot mix"), e2.getMessage)
-    // an existing UNSTAMPED (v1) tree cannot be adopted by either
-    sources.Writers.writeLexIndex(p, sz, s"$base/v1")
+    // an existing UNSTAMPED (st22 routed) tree cannot be adopted by
+    // either v2 writer
+    val docs = sources.Tables.documents(spark, sf)
+    val vocab = sq.lexFreezeVocab(spark, docs, base)
+    val qg = sq.lexFreezeProbeSet(spark, docs, vocab, base)
+    val slice = docs.filter($"doc_id" % 3 === 0)
+    sq.lexAdmit(vocab, qg, slice, s"$base/routed", "base")
     val e3 = intercept[IllegalArgumentException] {
-      sources.Writers.writeLexIndexV2Leg(p, sz, s"$base/v1", "0", 4)
+      sources.Writers.writeLexIndexV2Leg(p, sz, s"$base/routed", "0", 4)
     }
     assert(e3.getMessage.contains("unstamped"), e3.getMessage)
     val e4 = intercept[IllegalArgumentException] {
-      sources.Writers.writeLexIndexV2(p, sz, s"$base/v1", 4,
+      sources.Writers.writeLexIndexV2(p, sz, s"$base/routed", 4,
         org.apache.spark.sql.SaveMode.Append)
     }
     assert(e4.getMessage.contains("unstamped"), e4.getMessage)
+    // ... and a routed leg cannot land in a STAMPED tree, flat or
+    // legged: its leg=/inqg= dirs would break partition discovery of
+    // the gb= layout at the next read
+    Seq("flat", "legged").foreach { tree =>
+      val e5 = intercept[IllegalArgumentException] {
+        sq.lexAdmit(vocab, qg, slice, s"$base/$tree", "1")
+      }
+      assert(e5.getMessage.contains("cannot mix"), e5.getMessage)
+    }
+    // the refused legs left nothing behind: the stamped trees still read
+    Seq("flat", "legged").foreach { tree =>
+      assert(sources.Writers.readLexIndex(spark, s"$base/$tree")._1.count()
+        == 2L, s"$tree tree no longer reads after the refused leg")
+    }
   }
 
   test("a non-index dir is refused before any read") {

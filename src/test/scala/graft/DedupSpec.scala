@@ -553,10 +553,10 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("d12 re-pointed at the w06 stored band index reproduces its answer") {
-    // the round-8 verdict's ask #3 closure: the -Dgraft.d12.indexDir
-    // flag swaps d12's inline corpus signing for the parquet index the
-    // w06 writer maintains (write half, append half — the incremental
-    // admission cycle); the flagged run must be row-identical to the
+    // the round-8 verdict's ask #3 closure: d12Build's index parameter
+    // swaps d12's inline corpus signing for the parquet index the w06
+    // writer maintains (write half, append half — the incremental
+    // admission cycle); the stored run must be row-identical to the
     // inline run, or the stored index lost/duplicated/drifted rows.
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -567,10 +567,6 @@ class DedupSpec extends AnyFunSuite {
       corpus.filter($"doc_id" % 4 === 0), dest, "overwrite")
     operators.Dedup.writeNearDupIndex(
       corpus.filter($"doc_id" % 4 === 2), dest, "append")
-    // round-9 advice: thread the index dir as an explicit d12Build
-    // parameter — no process-global system-property mutation, so this
-    // cannot race a concurrent d12 run if suites ever fork parallel
-    // (the property stays the REGISTERED query's entry-point switch)
     def rows(indexDir: Option[String]) =
       operators.Dedup.d12Build(spark, sf, indexDir)
         .collect()
@@ -578,33 +574,14 @@ class DedupSpec extends AnyFunSuite {
           if (r.isNullAt(2)) -1.0 else r.getDouble(2))).toSet
     val inline = rows(None)
     val stored = rows(Some(dest))
-    // and the REGISTERED query's -D entry point stays covered (the
-    // driver has no other channel into stored-index mode — a property
-    // rename must fail here, not silently fall back to inline mode);
-    // the suites run sequentially in the forked test JVM, so this
-    // short set/clear window cannot race another d12 invocation
-    System.setProperty("graft.d12.indexDir", dest)
-    val viaEntryPoint =
-      try SparkEntry.queries("d12_incremental_neardup")(spark, sf)
-        .collect()
-        .map(r => (r.getLong(0), r.getBoolean(1),
-          if (r.isNullAt(2)) -1.0 else r.getDouble(2))).toSet
-      finally System.clearProperty("graft.d12.indexDir")
-    assert(viaEntryPoint == stored,
-      "the -Dgraft.d12.indexDir entry point did not engage the stored index")
     // equality alone can't prove ENGAGEMENT (stored == inline by the
-    // main assertion) — a bogus dir must make the registered query
-    // FAIL; a property-name typo would silently run inline and pass
-    System.setProperty("graft.d12.indexDir", s"$dest-definitely-missing")
-    try {
-      val failed =
-        try {
-          SparkEntry.queries("d12_incremental_neardup")(spark, sf).collect()
-          false
-        } catch { case _: Exception => true }
-      assert(failed, "-Dgraft.d12.indexDir pointing at a missing dir " +
-        "did not fail — the registered query ignored the switch")
-    } finally System.clearProperty("graft.d12.indexDir")
+    // main assertion) — a bogus dir must make the stored run FAIL; a
+    // build that ignored its parameter would silently run inline
+    val failed =
+      try { rows(Some(s"$dest-definitely-missing")); false }
+      catch { case _: Exception => true }
+    assert(failed, "d12Build pointed at a missing index dir did not " +
+      "fail — the stored path ignored its parameter")
     assert(inline.nonEmpty)
     assert(stored == inline,
       s"stored-index run diverges: extra=${(stored -- inline).take(5)}, " +

@@ -11,7 +11,7 @@ class FormatEdgeSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private lazy val csvDir = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_badcsv")
+    val dir = java.nio.file.Paths.get(tempDir("graft_badcsv"))
     java.nio.file.Files.write(dir.resolve("part.csv"),
       java.util.Arrays.asList(
         "1,alpha,10.5",
@@ -62,7 +62,7 @@ class FormatEdgeSpec extends AnyFunSuite {
   }
 
   test("JSON missing fields are null; extra fields are ignored") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json")
+    val dir = java.nio.file.Paths.get(tempDir("graft_json"))
     java.nio.file.Files.write(dir.resolve("a.json"),
       java.util.Arrays.asList(
         """{"id": 1, "name": "a", "v": 1.5}""",

@@ -180,8 +180,7 @@ class MiscSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.{pmod => fpmod, lit => flit}
     val wq = operators.WriterQueries
-    val dim = java.nio.file.Files
-      .createTempDirectory("graft_manifest_lost").toString + "/dim"
+    val dim = tempDir("graft_manifest_lost") + "/dim"
     val cutoff = "1997-01-01"
     val orders = sources.Tables.orders(spark, sf)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",
@@ -219,8 +218,7 @@ class MiscSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.{pmod => fpmod, lit => flit}
     val wq = operators.WriterQueries
-    val dim = java.nio.file.Files
-      .createTempDirectory(s"graft_$tag").toString + "/dim"
+    val dim = tempDir(s"graft_$tag") + "/dim"
     val cutoff = "1997-01-01"
     val orders = sources.Tables.orders(spark, sf)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",

@@ -158,8 +158,7 @@ class PlanSpec extends AnyFunSuite {
     // the dim must be a FILE scan: a LocalRelation dim gets its filter
     // constant-folded away, leaving no selective predicate for the
     // PartitionPruning rule to latch onto
-    val dimPath = java.nio.file.Files
-      .createTempDirectory("graft_dpp_dim").toString
+    val dimPath = tempDir("graft_dpp_dim")
     Seq(("F", "finished"), ("O", "open"), ("P", "partial"))
       .toDF("st", "meaning").write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath)
@@ -235,8 +234,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("compaction rewrites many small files into the target count") {
-    val src = java.nio.file.Files.createTempDirectory("graft_small").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val src = tempDir("graft_small")
+    val dest = tempDir("graft_compact")
     sources.Tables.orders(spark, sf).repartition(20).write
       .mode("overwrite").parquet(src)
     def parts(p: String) = new java.io.File(p).listFiles()
@@ -254,8 +253,7 @@ class PlanSpec extends AnyFunSuite {
     // the maintenance op must accept scheme-qualified roots — its
     // listing/rename goes through FileSystem, not java.io.File, so the
     // same code binds to HDFS/object-store connectors at scale
-    val root = "file://" + java.nio.file.Files
-      .createTempDirectory("graft_fsopt").toString
+    val root = "file://" + tempDir("graft_fsopt")
     val docs = sources.Tables.documents(spark, sf)
       .select($"doc_id", $"lang", $"text")
     docs.filter($"lang" === "en").repartition(6)
@@ -283,7 +281,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned write produces partition directories") {
-    val dest = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dest = tempDir("graft_part")
     sources.Writers.writePartitioned(
       sources.Tables.orders(spark, sf), "o_orderstatus", dest)
     val dirs = new java.io.File(dest).listFiles().map(_.getName)
@@ -717,8 +715,7 @@ class PlanSpec extends AnyFunSuite {
     // temp-view listing, an in-place same-name rewrite) by explicit
     // eviction.
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_memo_fp").toString
+    val dir = tempDir("graft_memo_fp")
     sources.Writers.freshScratch(spark, dir)
     sources.Tables.embeddings(spark, sf).filter($"vec_id" % 4 === 0)
       .write.mode("overwrite").parquet(dir)
@@ -785,8 +782,7 @@ class PlanSpec extends AnyFunSuite {
         === 7)
       .select($"vec_id".as("c_id"), $"embedding".as("c_vec"),
         $"nrm".as("c_nrm"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dpp_serve").toString
+    val dir = tempDir("graft_dpp_serve")
     sources.Writers.freshScratch(spark, dir)
     sources.Writers.writeIvfIndex(cents,
       operators.Similarity.ivfAssignment(emb, cents), dir)
@@ -843,8 +839,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = sources.Tables.documents(spark, sf)
     val (p, sz) = operators.Similarity.lexIndex(docs)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_v2_prune").toString
+    val dir = tempDir("graft_v2_prune")
     sources.Writers.freshScratch(spark, dir)
     val buckets = 64
     sources.Writers.writeLexIndexV2(p, sz, dir, buckets)
@@ -889,8 +884,7 @@ class PlanSpec extends AnyFunSuite {
     // same way: leaf partitions are (leg, gb) dirs, and the gb filter
     // dir-prunes at the second level across every leg — so a 2-leg
     // tree reads at most 2x the shingle bound, never the whole set
-    val legDir = java.nio.file.Files
-      .createTempDirectory("graft_v2leg_prune").toString
+    val legDir = tempDir("graft_v2leg_prune")
     sources.Writers.freshScratch(spark, legDir)
     // NB: `lit` here is the escaped query-text String above, so the
     // usual count(lit(1)) idiom would resolve to String.apply — count

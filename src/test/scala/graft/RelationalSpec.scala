@@ -7,11 +7,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * cheap smoke-level checks — the deep correctness gate is the driver's
   * DuckDB differential run over SparkEntry.oracleSql). */
 object SparkTestSession {
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+  sys.addShutdownHook(tempDirs.forEach(d =>
+    org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  /** A fresh temp dir named `<prefix><random>`, deleted with its
+    * contents when the test JVM exits (specs run forked, `Test / fork
+    * := true`), so a suite run leaves the temp dir as it found it. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
   lazy val spark: SparkSession = {
     val s = GraftSession.configure(SparkSession.builder()
       .master("local[4]").appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString))
+      .config("spark.sql.warehouse.dir", tempDir("graft_wh")))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.registerAll(s)

@@ -1705,7 +1705,7 @@ class ScaleStressSpec extends AnyFunSuite
       val q = pipe(mem.toDS()).writeStream.format("memory").queryName(name)
         .outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_sstress").toString)
+          tempDir("graft_sstress"))
         .start()
       try {
         streamChunks.foreach { chunk =>

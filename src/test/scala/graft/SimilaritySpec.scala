@@ -344,18 +344,18 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("s11 served from the w12 stored lexical index reproduces its" +
-      " answer; the -D switch engages") {
-    import spark.implicits._
+      " answer; a bogus index dir fails") {
     // w12's oracle (s11's SQL verbatim) already proves stored≡inline
     // differentially; this pins the same claim in-suite AND proves the
-    // registered query's -Dgraft.s11.lexIndexDir switch is LIVE — the
-    // round-10 lesson: equality alone is vacuous (stored == inline by
-    // design), engagement needs the negative probe.
+    // stored path is LIVE — the round-10 lesson: equality alone is
+    // vacuous (stored == inline by design), engagement needs the
+    // negative probe.
     val dest = s"${System.getProperty("java.io.tmpdir")}/graft_s11idx_test"
     graft.sources.Writers.freshScratch(spark, dest)
     val (postings, sizes) = operators.Similarity.lexIndex(
       sources.Tables.documents(spark, sf))
-    graft.sources.Writers.writeLexIndex(postings, sizes, dest)
+    graft.sources.Writers.writeLexIndexV2(postings, sizes, dest,
+      operators.Similarity.LexBuckets)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSet
@@ -365,31 +365,22 @@ class SimilaritySpec extends AnyFunSuite {
     assert(stored == inline,
       s"stored-index s11 diverges: extra=${(stored -- inline).take(5)}, " +
         s"missing=${(inline -- stored).take(5)}")
-    // the registered query's -D entry point (the driver's only channel
-    // into stored mode) — sequential suites, so the set/clear window
-    // cannot race another s11 run
-    System.setProperty("graft.s11.lexIndexDir", dest)
-    val viaEntryPoint =
-      try rows(SparkEntry.queries("s11_hybrid_rrf")(spark, sf))
-      finally System.clearProperty("graft.s11.lexIndexDir")
-    assert(viaEntryPoint == stored,
-      "the -Dgraft.s11.lexIndexDir entry point did not engage the index")
     // negative probe: a bogus dir must FAIL, not silently run inline —
     // and it must fail on the STORED-INDEX READ specifically (a broad
     // catch would also pass on an unrelated s11 failure, weakening the
-    // "switch is live" proof; round-13 advice)
-    System.setProperty("graft.s11.lexIndexDir", s"$dest-definitely-missing")
-    try {
-      val failure =
-        try { SparkEntry.queries("s11_hybrid_rrf")(spark, sf).collect(); None }
-        catch { case e: Exception => Some(e) }
-      assert(failure.isDefined,
-        "-Dgraft.s11.lexIndexDir pointing at a missing dir " +
-          "did not fail — the registered query ignored the switch")
-      val msg = failure.get.getMessage
-      assert(msg != null && msg.contains("definitely-missing"),
-        s"s11 failed for a reason unrelated to the bogus index dir: $msg")
-    } finally System.clearProperty("graft.s11.lexIndexDir")
+    // "stored path is live" proof; round-13 advice)
+    val failure =
+      try {
+        operators.Similarity.s11Build(spark, sf,
+          Some(s"$dest-definitely-missing")).collect()
+        None
+      } catch { case e: Exception => Some(e) }
+    assert(failure.isDefined,
+      "s11Build pointed at a missing index dir did not fail — the " +
+        "stored path ignored its parameter")
+    val msg = failure.get.getMessage
+    assert(msg != null && msg.contains("definitely-missing"),
+      s"s11 failed for a reason unrelated to the bogus index dir: $msg")
   }
 
   test("s12: BM25 serves from the stored w12 index with zero extra" +
@@ -403,7 +394,8 @@ class SimilaritySpec extends AnyFunSuite {
     graft.sources.Writers.freshScratch(spark, dest)
     val (postings, sizes) = operators.Similarity.lexIndex(
       sources.Tables.documents(spark, sf))
-    graft.sources.Writers.writeLexIndex(postings, sizes, dest)
+    graft.sources.Writers.writeLexIndexV2(postings, sizes, dest,
+      operators.Similarity.LexBuckets)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val inline = rows(operators.Similarity.bm25FromIndex(postings, sizes))

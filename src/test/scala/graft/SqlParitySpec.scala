@@ -688,17 +688,16 @@ class SqlParitySpec extends AnyFunSuite {
     // side). A bogus dir must FAIL, proving the stored path is real.
     register()
     import spark.implicits._
-    val lexDir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_lexserve").toString
+    val lexDir = tempDir("graft_tvf_lexserve")
     sources.Writers.freshScratch(spark, lexDir)
     val (p, sz) = operators.Similarity
       .lexIndex(sources.Tables.documents(spark, sf))
-    sources.Writers.writeLexIndex(p, sz, lexDir)
+    sources.Writers.writeLexIndexV2(p, sz, lexDir,
+      operators.Similarity.LexBuckets)
     val served = spark.sql(s"SELECT * FROM bm25_serve('$lexDir')")
     assert(canon(served) ==
       canon(spark.sql("SELECT * FROM bm25_topk('documents')")))
-    val ivfDir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_ivfserve").toString
+    val ivfDir = tempDir("graft_tvf_ivfserve")
     sources.Writers.freshScratch(spark, ivfDir)
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
@@ -781,12 +780,12 @@ class SqlParitySpec extends AnyFunSuite {
       s"SELECT * FROM bm25_topk('documents', query => '$lit', 1)")
     assert(k1.collect().forall(_.getInt(2) <= 1))
     // the serve twin takes the same form, against a stored index
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_freeserve").toString
+    val dir = tempDir("graft_tvf_freeserve")
     sources.Writers.freshScratch(spark, dir)
     val (p, sz) = operators.Similarity
       .lexIndex(sources.Tables.documents(spark, sf))
-    sources.Writers.writeLexIndex(p, sz, dir)
+    sources.Writers.writeLexIndexV2(p, sz, dir,
+      operators.Similarity.LexBuckets)
     assert(canon(spark.sql(
         s"SELECT * FROM bm25_serve('$dir', query => '$lit')")) ==
       canon(viaText),
@@ -800,10 +799,10 @@ class SqlParitySpec extends AnyFunSuite {
   }
 
   test("bm25_serve on a V2 (g-hash-bucketed) index: pruned serve == " +
-      "v1 serve == inline, through real write/read cycles") {
+      "inline, through real write/read cycles") {
     // round-17 verdict ask #1: the lexical layout revision. The v2
-    // artifact must serve ROW-IDENTICALLY to the v1 artifact and the
-    // inline build for an arbitrary query view AND free text — the
+    // artifact must serve ROW-IDENTICALLY to the inline build for an
+    // arbitrary query view AND free text — the
     // bucketed write, the stamp dispatch, the bucket-set collect and
     // the pruned-read df regroup all sit under this pin (a shingle
     // scattered across buckets would split its df and change scores;
@@ -813,12 +812,8 @@ class SqlParitySpec extends AnyFunSuite {
     import spark.implicits._
     val docs = sources.Tables.documents(spark, sf)
     val (p, sz) = operators.Similarity.lexIndex(docs)
-    val v1Dir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_lexv1").toString
-    val v2Dir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_lexv2").toString
-    Seq(v1Dir, v2Dir).foreach(d => sources.Writers.freshScratch(spark, d))
-    sources.Writers.writeLexIndex(p, sz, v1Dir)
+    val v2Dir = tempDir("graft_tvf_lexv2")
+    sources.Writers.freshScratch(spark, v2Dir)
     // two v2 legs under one frozen B — the w13 admission cycle
     sources.Writers.writeLexIndexV2(p.filter($"doc_id" % 2 === 0),
       sz.filter($"doc_id" % 2 === 0), v2Dir, buckets = 32)
@@ -826,7 +821,6 @@ class SqlParitySpec extends AnyFunSuite {
       sz.filter($"doc_id" % 2 === 1), v2Dir, buckets = 32,
       org.apache.spark.sql.SaveMode.Append)
     assert(sources.Writers.lexLayoutOf(spark, v2Dir).contains(32))
-    assert(sources.Writers.lexLayoutOf(spark, v1Dir).isEmpty)
     // arbitrary query view (NOT the default slice; ids stay in the
     // corpus namespace so self-exclusion semantics ride along)
     docs.filter($"doc_id" % 97 === 11)
@@ -838,11 +832,7 @@ class SqlParitySpec extends AnyFunSuite {
         s"SELECT * FROM bm25_serve('$v2Dir', 'q_v2_docs')")) ==
       canon(inline),
       "v2 pruned serve diverged from the inline build")
-    assert(canon(spark.sql(
-        s"SELECT * FROM bm25_serve('$v1Dir', 'q_v2_docs')")) ==
-      canon(inline),
-      "v1 serve diverged from the inline build")
-    // free text through the pruned path == the v1 full read
+    // free text through the pruned path == the inline build
     val sample = docs.filter($"doc_id" % 50 === 0)
       .select($"text").orderBy($"doc_id").limit(1)
       .collect()(0).getString(0)
@@ -850,15 +840,15 @@ class SqlParitySpec extends AnyFunSuite {
     assert(canon(spark.sql(
         s"SELECT * FROM bm25_serve('$v2Dir', query => '$lit')")) ==
       canon(spark.sql(
-        s"SELECT * FROM bm25_serve('$v1Dir', query => '$lit')")),
-      "v2 free-text serve diverged from v1")
+        s"SELECT * FROM bm25_topk('documents', query => '$lit')")),
+      "v2 free-text serve diverged from the inline build")
     // sub-shingle free text degrades to empty on the pruned path too
     assert(spark.sql(
       s"SELECT * FROM bm25_serve('$v2Dir', query => 'ab')")
       .collect().isEmpty)
     // default-slice form over a v2 tree: layout-transparent full read
     assert(canon(spark.sql(s"SELECT * FROM bm25_serve('$v2Dir')")) ==
-      canon(spark.sql(s"SELECT * FROM bm25_serve('$v1Dir')")),
+      canon(spark.sql("SELECT * FROM bm25_topk('documents')")),
       "default-slice serve must be layout-transparent")
     // appending under a DIFFERENT bucket count must fail loudly — it
     // would scatter shingles across buckets and break pruning/df
@@ -867,7 +857,7 @@ class SqlParitySpec extends AnyFunSuite {
         org.apache.spark.sql.SaveMode.Append)
     }
     assert(ex.getMessage.contains("buckets"))
-    Seq(v1Dir, v2Dir).foreach(d => sources.Writers.freshScratch(spark, d))
+    sources.Writers.freshScratch(spark, v2Dir)
   }
 
   test("v2 ADMISSION legs: a legged v2 index serves identically to " +
@@ -886,8 +876,7 @@ class SqlParitySpec extends AnyFunSuite {
     val (p, sz) = operators.Similarity.lexIndex(docs)
     val pc = p.localCheckpoint()
     val szc = sz.localCheckpoint()
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_lexv2leg").toString
+    val dir = tempDir("graft_tvf_lexv2leg")
     sources.Writers.freshScratch(spark, dir)
     val B = 32
     (0 until 3).foreach { k =>
@@ -936,15 +925,14 @@ class SqlParitySpec extends AnyFunSuite {
     // identity contract both artifacts share by construction.
     register()
     import spark.implicits._
-    val lexDir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_hyblex").toString
-    val ivfDir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_hybivf").toString
+    val lexDir = tempDir("graft_tvf_hyblex")
+    val ivfDir = tempDir("graft_tvf_hybivf")
     Seq(lexDir, ivfDir).foreach(d =>
       sources.Writers.freshScratch(spark, d))
     val (p, sz) = operators.Similarity
       .lexIndex(sources.Tables.documents(spark, sf))
-    sources.Writers.writeLexIndex(p, sz, lexDir)
+    sources.Writers.writeLexIndexV2(p, sz, lexDir,
+      operators.Similarity.LexBuckets)
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
         operators.Similarity.norm($"embedding").as("nrm"))
@@ -964,12 +952,16 @@ class SqlParitySpec extends AnyFunSuite {
     val k1 = spark.sql(
       s"SELECT * FROM hybrid_serve('$lexDir', '$ivfDir', 'embeddings', 1)")
     assert(k1.collect().nonEmpty && k1.collect().forall(_.getInt(3) <= 1))
-    // a v2 lexical artifact serves the default slice identically, so
-    // hybrid_serve is layout-agnostic on its lexical leg
-    val v2Dir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_hyblex2").toString
+    // a LEGGED v2 lexical artifact (the admission shape) serves the
+    // default slice identically, so hybrid_serve is layout-agnostic on
+    // its lexical leg
+    val v2Dir = tempDir("graft_tvf_hyblex2")
     sources.Writers.freshScratch(spark, v2Dir)
-    sources.Writers.writeLexIndexV2(p, sz, v2Dir, buckets = 16)
+    (0 until 2).foreach { k =>
+      sources.Writers.writeLexIndexV2Leg(p.filter($"doc_id" % 2 === k),
+        sz.filter($"doc_id" % 2 === k), v2Dir, s"00$k",
+        operators.Similarity.LexBuckets)
+    }
     assert(canon(spark.sql(
         s"SELECT * FROM hybrid_serve('$v2Dir', '$ivfDir', 'embeddings')")) ==
       canon(served))
@@ -987,14 +979,14 @@ class SqlParitySpec extends AnyFunSuite {
     // the v2 layout's own integrity class: a posting file in the
     // wrong gb dir is invisible to every pruned serve that should
     // have scored its rows — the stamp-dispatched check must catch
-    // exactly that, and must NOT appear for v1 artifacts.
+    // exactly that, and must NOT appear for st22's unstamped routed
+    // chain, which has no buckets.
     register()
     import spark.implicits._
     val docs = sources.Tables.documents(spark, sf)
     docs.createOrReplaceTempView("fsck_v2_docs")
     val (p, sz) = operators.Similarity.lexIndex(docs)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fsck_v2").toString
+    val dir = tempDir("graft_fsck_v2")
     sources.Writers.freshScratch(spark, dir)
     sources.Writers.writeLexIndexV2(p, sz, dir, buckets = 16)
     def checksOf(q: String): Map[String, Long] =
@@ -1035,8 +1027,7 @@ class SqlParitySpec extends AnyFunSuite {
     // returns zero rows — a prompt typo degrades, it doesn't error.
     register()
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tvf_edge_idx").toString
+    val dir = tempDir("graft_tvf_edge_idx")
     sources.Writers.freshScratch(spark, dir)
     val emb = sources.Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding",
@@ -1083,8 +1074,7 @@ class SqlParitySpec extends AnyFunSuite {
     // arithmetic dq08's oracle hash-verifies.
     register()
     import spark.implicits._
-    val dest = java.nio.file.Files
-      .createTempDirectory("graft_tvf_fsck").toString
+    val dest = tempDir("graft_tvf_fsck")
     sources.Writers.freshScratch(spark, dest)
     val cutoff = "1997-01-01"
     val orders = sources.Tables.orders(spark, sf)
@@ -1128,15 +1118,15 @@ class SqlParitySpec extends AnyFunSuite {
     // LEXICAL: index the even-doc snapshot, audit against it -> zeros
     val docs = sources.Tables.documents(spark, sf)
     docs.filter($"doc_id" % 2 === 0).createOrReplaceTempView("fsck_snap_docs")
-    val lexDir = java.nio.file.Files
-      .createTempDirectory("graft_idxfsck_lex").toString
+    val lexDir = tempDir("graft_idxfsck_lex")
     sources.Writers.freshScratch(spark, lexDir)
     val (p, sz) = operators.Similarity
       .lexIndex(spark.table("fsck_snap_docs"))
-    sources.Writers.writeLexIndex(p, sz, lexDir)
+    sources.Writers.writeLexIndexV2(p, sz, lexDir,
+      operators.Similarity.LexBuckets)
     val clean = checksOf(s"SELECT * FROM index_fsck('$lexDir', 'fsck_snap_docs')")
     assert(clean.keySet == Set("missing_docs", "orphaned_docs",
-      "orphaned_postings", "size_drift"))
+      "orphaned_postings", "size_drift", "misbucketed_postings"))
     assert(clean.values.forall(_ == 0L),
       s"clean lexical index audited non-zero: $clean")
     // the corpus as it stands "now": odd docs appeared (missing_docs),
@@ -1167,8 +1157,7 @@ class SqlParitySpec extends AnyFunSuite {
       .select($"vec_id".as("c_id"), $"embedding".as("c_vec"),
         $"nrm".as("c_nrm"))
     assert(cents.count() > 0, "degenerate test fixture: no centroids")
-    val ivfDir = java.nio.file.Files
-      .createTempDirectory("graft_idxfsck_ivf").toString
+    val ivfDir = tempDir("graft_idxfsck_ivf")
     sources.Writers.freshScratch(spark, ivfDir)
     sources.Writers.writeIvfIndex(cents,
       operators.Similarity.ivfAssignment(snap, cents), ivfDir)

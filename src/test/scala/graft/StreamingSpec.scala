@@ -244,7 +244,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("tws_out")
         .outputMode("update")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_tws").toString)
+          tempDir("graft_tws"))
         .start()
       try {
         val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
@@ -278,7 +278,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("rocksdb_out")
         .outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+          tempDir("graft_ckpt"))
         .start()
       try {
         val evs = batchEvents.take(200)
@@ -294,8 +294,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch sink writes each micro-batch transactionally") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dest = java.nio.file.Files.createTempDirectory("graft_febatch")
-      .toString
+    val dest = tempDir("graft_febatch")
     val mem = MemoryStream[Ev]
     val q = streaming.Streams.tumblingCounts(mem.toDF())
       .writeStream
@@ -378,7 +377,7 @@ class StreamingSpec extends AnyFunSuite {
   test("st09: foreachBatch upsert sink is idempotent and equals the batch twin") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dest = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dest = tempDir("graft_upsert")
     val mem = MemoryStream[Ev]
     val q = streaming.Streams.hourlyTotalsUpsert(mem.toDF(), dest)
     try {
@@ -410,7 +409,7 @@ class StreamingSpec extends AnyFunSuite {
     // every part-file rename: a chunk committed straight into the live
     // source dir is listed part-way through and split over batches.
     SlowRenameFileSystem.register(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft_split").toString
+    val base = tempDir("graft_split")
     val src = s"${SlowRenameFileSystem.Scheme}://$base/src"
     sources.Writers.freshScratch(spark, src)
     val chunks = (0 until 3).map(k =>
@@ -431,9 +430,9 @@ class StreamingSpec extends AnyFunSuite {
     // checkpoint — the result must equal the batch twin with no loss
     // and no double-counting.
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_dest").toString
+    val srcDir = tempDir("graft_src")
+    val ckpt = tempDir("graft_ckpt")
+    val dest = tempDir("graft_dest")
     val schema = sources.Tables.events(spark, sf).schema
     val chunks = batchEvents.grouped(
       math.max(1, batchEvents.size / 2)).toSeq
@@ -472,9 +471,9 @@ class StreamingSpec extends AnyFunSuite {
     // DIFFERENT batch partition, which the idempotent sink cannot
     // collapse — only the ledger prevents it).
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_qsrc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qckpt").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_qdest").toString
+    val srcDir = tempDir("graft_qsrc")
+    val ckpt = tempDir("graft_qckpt")
+    val dest = tempDir("graft_qdest")
     val schema = sources.Tables.events(spark, sf).schema
     val tokens = Seq("view", "click*", "purchase")
     val chunks = batchEvents.grouped(
@@ -532,13 +531,13 @@ class StreamingSpec extends AnyFunSuite {
         .select(($"doc_id" + 1000000L).as("doc_id"),
           concat($"text", lit(" zq1 zq2 zq3 zq4 zq5 zq6")).as("text")))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ndsrc").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_nddest").toString
+    val srcDir = tempDir("graft_ndsrc")
+    val dest = tempDir("graft_nddest")
     streaming.Streams.feedChunks(srcDir,
         batchDocs.grouped(math.max(1, batchDocs.size / 3)).toSeq
           .map(_.toDF("doc_id", "text"))) {
       streaming.Streams.startStream(spark, srcDir, sq.DocSchema,
-        java.nio.file.Files.createTempDirectory("graft_ndckpt").toString)(
+        tempDir("graft_ndckpt"))(
         sq.nearDupGateStep(cBands, cSh, dest))
     }
     val got = graft.streaming.Streams.readSink(spark, dest,
@@ -581,9 +580,9 @@ class StreamingSpec extends AnyFunSuite {
     val batch = operators.Dedup.d12Batch(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val chunks = batch.grouped(math.max(1, batch.size / 3)).toSeq
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ndrsrc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ndrckpt").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_ndrdest").toString
+    val srcDir = tempDir("graft_ndrsrc")
+    val ckpt = tempDir("graft_ndrckpt")
+    val dest = tempDir("graft_ndrdest")
 
     def startQuery() =
       streaming.Streams.startStream(spark, srcDir, sq.DocSchema, ckpt)(
@@ -639,9 +638,9 @@ class StreamingSpec extends AnyFunSuite {
       .select($"vec_id", $"embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     val chunks = queries.grouped(math.max(1, queries.size / 3)).toSeq
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_annsrc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_annckpt").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_anndest").toString
+    val srcDir = tempDir("graft_annsrc")
+    val ckpt = tempDir("graft_annckpt")
+    val dest = tempDir("graft_anndest")
     val srcSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("vec_id",
         org.apache.spark.sql.types.LongType),
@@ -697,17 +696,18 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
       IntegerType}
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25idx").toString
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_bm25src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_bm25ckpt").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_bm25dest").toString
+    val idx = tempDir("graft_bm25idx")
+    val srcDir = tempDir("graft_bm25src")
+    val ckpt = tempDir("graft_bm25ckpt")
+    val dest = tempDir("graft_bm25dest")
     // the SAME stages the registered query ships: write once through
-    // the w12 layout (postings materialized before the two write legs,
+    // w12's writer (postings materialized before the two write legs,
     // matching st24's build), serve only from the read-back form
     val p0 = operators.Similarity.lexIndex(
       sources.Tables.documents(spark, sf))._1.localCheckpoint()
     val sz0 = p0.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    graft.sources.Writers.writeLexIndex(p0, sz0, s"$idx/lex")
+    graft.sources.Writers.writeLexIndexV2(p0, sz0, s"$idx/lex",
+      operators.Similarity.LexBuckets)
     val (pr, szr) = graft.sources.Writers.readLexIndex(spark, s"$idx/lex")
     val statics = operators.StreamingQueries.bm25ServeStatics(pr, szr)
     val postings = statics._1
@@ -760,9 +760,9 @@ class StreamingSpec extends AnyFunSuite {
       .select($"vec_id", $"embedding", $"label").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).toSeq
     val chunks = queries.grouped(math.max(1, queries.size / 3)).toSeq
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_fsrc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fckpt").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_fdest").toString
+    val srcDir = tempDir("graft_fsrc")
+    val ckpt = tempDir("graft_fckpt")
+    val dest = tempDir("graft_fdest")
     val srcSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("vec_id",
         org.apache.spark.sql.types.LongType),
@@ -825,15 +825,15 @@ class StreamingSpec extends AnyFunSuite {
         $"nrm".as("c_nrm")).localCheckpoint()
     val assigned = operators.Similarity.ivfAssignment(emb, cents)
       .localCheckpoint()
-    // the lexical leg's statics ride w12's stored layout, read back
-    val lexDir = java.nio.file.Files
-      .createTempDirectory("graft_st20rs_lex").toString + "/index"
+    // the lexical leg's statics ride w12's stored index, read back
+    val lexDir = tempDir("graft_st20rs_lex") + "/index"
     val p0 = operators.Similarity.lexIndex(
       sources.Tables.documents(spark, sf))._1.localCheckpoint()
     val sz0 = p0.groupBy($"doc_id")
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
-    graft.sources.Writers.writeLexIndex(p0, sz0, lexDir)
+    graft.sources.Writers.writeLexIndexV2(p0, sz0, lexDir,
+      operators.Similarity.LexBuckets)
     val (pr, szr) = graft.sources.Writers.readLexIndex(spark, lexDir)
     val postings = pr.localCheckpoint()
     val sizes = szr.localCheckpoint()
@@ -841,9 +841,9 @@ class StreamingSpec extends AnyFunSuite {
       .select($"vec_id", $"embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     val chunks = queries.grouped(math.max(1, queries.size / 3)).toSeq
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_hsrc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_hckpt").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_hdest").toString
+    val srcDir = tempDir("graft_hsrc")
+    val ckpt = tempDir("graft_hckpt")
+    val dest = tempDir("graft_hdest")
     val srcSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("vec_id",
         org.apache.spark.sql.types.LongType),
@@ -896,8 +896,7 @@ class StreamingSpec extends AnyFunSuite {
     // kill after chunk 1, deliver chunks 2-3 while down, restart — the
     // version-keyed merge must land on the same bytes.
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_st18rs").toString
+    val base = tempDir("graft_st18rs")
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val state = s"$base/sketch"
     sources.Writers.freshScratch(spark, base, "src")
@@ -940,8 +939,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
       StringType, DoubleType, TimestampType, BooleanType}
     val sq = operators.StreamingQueries
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_st17rs").toString
+    val base = tempDir("graft_st17rs")
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dim = s"$base/dim"
     sources.Writers.freshScratch(spark, base, "src")
@@ -1000,8 +998,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
     val sq = operators.StreamingQueries
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_st21rs").toString
+    val base = tempDir("graft_st21rs")
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dim = s"$base/dim"
     sources.Writers.freshScratch(spark, base, "src")
@@ -1064,8 +1061,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
       DoubleType, IntegerType}
     val sq = operators.StreamingQueries
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_st22rs").toString
+    val base = tempDir("graft_st22rs")
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dest = s"$base/dest"; val idx = s"$base/index"
     sources.Writers.freshScratch(spark, base, "src")
@@ -1168,8 +1164,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
       DoubleType, IntegerType}
     val sq = operators.StreamingQueries
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_st23rs").toString
+    val base = tempDir("graft_st23rs")
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val dest = s"$base/dest"; val idx = s"$base/index"
     sources.Writers.freshScratch(spark, base, "src")
@@ -1253,9 +1248,9 @@ class StreamingSpec extends AnyFunSuite {
     // boundary rows. Kill mid-stream, restart, land the rest, compare
     // to the batch asofJoin twin.
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_asrc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ackpt").toString
-    val dest = java.nio.file.Files.createTempDirectory("graft_adest").toString
+    val srcDir = tempDir("graft_asrc")
+    val ckpt = tempDir("graft_ackpt")
+    val dest = tempDir("graft_adest")
     val schema = sources.Tables.events(spark, sf).schema
     val chunks = batchEvents.grouped(
       math.max(1, batchEvents.size / 3)).toSeq
@@ -1313,7 +1308,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("tws_sessions")
         .outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_tws_timer").toString)
+          tempDir("graft_tws_timer"))
         .start()
       try {
         val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
@@ -1357,7 +1352,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("type_counts_out")
         .outputMode("update")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_mapstate").toString)
+          tempDir("graft_mapstate"))
         .start()
       try {
         val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
@@ -1394,7 +1389,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("funnel_out")
         .outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_funnel").toString)
+          tempDir("graft_funnel"))
         .start()
       try {
         // deterministically SCRAMBLE each chunk before delivery: the
@@ -1450,7 +1445,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("funnel_pred_out")
         .outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_funnelp").toString)
+          tempDir("graft_funnelp"))
         .start()
       try {
         val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
@@ -1524,7 +1519,7 @@ class StreamingSpec extends AnyFunSuite {
           .writeStream.format("memory").queryName(name)
           .outputMode("append")
           .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("graft_asof").toString)
+            tempDir("graft_asof"))
           .start()
         try {
           val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
@@ -1607,7 +1602,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("asof_subms_out")
         .outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_asof_us").toString)
+          tempDir("graft_asof_us"))
         .start()
       try {
         // deliver fully reversed (every row out of order), then advance
@@ -1644,7 +1639,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("recent_out")
         .outputMode("update")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_recent").toString)
+          tempDir("graft_recent"))
         .start()
       try {
         val evs = batchEvents.map(e => streaming.Event(e.event_id, e.ts,
@@ -1686,7 +1681,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName(name)
         .outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_qfunnel").toString)
+          tempDir("graft_qfunnel"))
         .start()
       try {
         // deterministic within-chunk SCRAMBLE (see the literal funnel
@@ -1792,8 +1787,7 @@ class StreamingSpec extends AnyFunSuite {
     def m(id: Long): streaming.FunnelMatch =
       streaming.FunnelMatch(id, id * 10, new Timestamp(1700000000000L + id),
         id * 10 + 1, new Timestamp(1700000001000L + id))
-    val dest = java.nio.file.Files
-      .createTempDirectory("graft_sink_retry").toString
+    val dest = tempDir("graft_sink_retry")
     // delivery 1 of batch 5: PARTIAL rows (a failure mid-write leaves
     // whatever the task committed); the retry re-delivers batch 5 in
     // full — at-least-once foreachBatch. The sink must end up with
