@@ -32,9 +32,21 @@ object HiveCatalogCheck {
         println(s"[hive-catalog] FAIL $name: $e")
     }
 
+  /** The metastore and warehouse live in a fresh temp dir that is
+    * deleted on every exit path, the failing one included. */
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val base = java.nio.file.Files.createTempDirectory("graft_hive")
+    try runChecks(sf, base)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    if (failures > 0) {
+      println(s"[hive-catalog] $failures FAILED")
+      sys.exit(1)
+    }
+    println("[hive-catalog] all checks passed")
+  }
+
+  private def runChecks(sf: String, base: java.nio.file.Path): Unit = {
     val spark = GraftSession.configure(SparkSession.builder()
       .master("local[4]").appName("graft-hive-catalog")
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
@@ -226,11 +238,5 @@ object HiveCatalogCheck {
           s"persisted stats lost: $stats")
       } finally spark2.stop()
     }
-
-    if (failures > 0) {
-      println(s"[hive-catalog] $failures FAILED")
-      sys.exit(1)
-    }
-    println("[hive-catalog] all checks passed")
   }
 }

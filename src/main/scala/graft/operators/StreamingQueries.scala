@@ -757,22 +757,34 @@ object StreamingQueries {
       WriterQueries.scd2LatestVersion(s, dim))
   }
 
-  /** Serialize/deserialize the versioned CMS state ([[st18CmsMonitor]]
-    * and its restart spec share the cycle). */
+  /** Read/write one version of the CMS state ([[st18CmsMonitor]] and
+    * its restart spec share the cycle): one plain file holding
+    * `CountMinSketch.writeTo`'s bytes, read and written by the driver
+    * through the Hadoop FileSystem, with no Spark job. A version is
+    * committed by [[Writers.commitSmallFile]], so a replayed batch that
+    * rewrites it replaces a whole file. */
   def readCms(s: org.apache.spark.sql.SparkSession, path: String)
-      : org.apache.spark.util.sketch.CountMinSketch =
-    org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      new java.io.ByteArrayInputStream(
-        s.read.parquet(path).collect()(0).getAs[Array[Byte]]("cms")))
+      : org.apache.spark.util.sketch.CountMinSketch = {
+    val (fs, p) = Writers.fsOf(s, path)
+    val in = fs.open(p)
+    try org.apache.spark.util.sketch.CountMinSketch.readFrom(in)
+    finally in.close()
+  }
 
   def writeCms(s: org.apache.spark.sql.SparkSession,
       cms: org.apache.spark.util.sketch.CountMinSketch,
       path: String): Unit = {
-    import s.implicits._
-    val bos = new java.io.ByteArrayOutputStream()
-    cms.writeTo(bos)
-    Seq(bos.toByteArray).toDF("cms")
-      .write.mode("overwrite").parquet(path)
+    val (fs, p) = Writers.fsOf(s, path)
+    Writers.commitSmallFile(fs, p)(cms.writeTo)
+  }
+
+  /** The latest committed version `n` of the `v<n>` files under
+    * `state` (a stranded staging file never parses as one). */
+  def cmsLatestVersion(s: org.apache.spark.sql.SparkSession,
+      state: String): Long = {
+    val (fs, p) = Writers.fsOf(s, state)
+    Writers.versionsNamed(
+      fs.listStatus(p).map(_.getPath.getName), "v").max
   }
 
   /** One st18 merge step: fold micro-batch `b`'s shingle sketch into
@@ -780,7 +792,8 @@ object StreamingQueries {
     * batch-id-keyed exactly-once device as st17 (a replayed batch
     * re-reads ITS version and recomputes v{id+1} deterministically;
     * counters are additive so the fold order across partitions is
-    * free). The merged state is ~56 KB regardless of corpus size. */
+    * free). The merged state is one ~112 KB file regardless of corpus
+    * size. */
   def cmsMergeStep(state: String)(b: org.apache.spark.sql.DataFrame,
       id: Long): Unit = {
     val bs = b.sparkSession
@@ -810,9 +823,10 @@ object StreamingQueries {
     * the batch answer.
     *
     * 100 TB: per batch, one map-side partial-sketch aggregate over the
-    * BATCH plus a ~56 KB state read/merge/write — state size is
-    * corpus-independent (the whole point of the sketch); the exact
-    * top-10 probe is the serving read, not per-batch work. */
+    * BATCH (its 2 jobs are the batch's only Spark work) plus a
+    * driver-side read/merge/write of one ~112 KB state file — state
+    * size is corpus-independent (the whole point of the sketch); the
+    * exact top-10 probe is the serving read, not per-batch work. */
   val st18CmsMonitor: Q = Q(
     "st18_cms_monitor", Analytics.q81CountMin.oracle.get) { (s, d) =>
     import s.implicits._
@@ -830,12 +844,8 @@ object StreamingQueries {
         (0 until 3).map(k => docs.filter(pmod($"doc_id", lit(3)) === k))) {
       Streams.startStream(s, src, DocSchema, ckpt)(cmsMergeStep(state))
     }
-    val latest = {
-      val (fs, stPath) = Writers.fsOf(s, state)
-      fs.listStatus(stPath).map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toInt).max
-    }
-    Analytics.cmsVerdict(s, d, s.read.parquet(s"$state/v$latest"))
+    val latest = readCms(s, s"$state/v${cmsLatestVersion(s, state)}")
+    Analytics.cmsVerdict(s, d, Seq(latest.toByteArray).toDF("cms"))
   }
 
   /** st19: STREAMING FILTERED-ANN SERVING — st16's serve cycle with

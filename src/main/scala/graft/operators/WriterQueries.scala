@@ -551,41 +551,26 @@ object WriterQueries {
   private def manifestPath(root: org.apache.hadoop.fs.Path, v: Long) =
     new org.apache.hadoop.fs.Path(root, s"$ManifestPrefix$v")
 
-  /** The COMMITTED manifest versions among `names` — digit-guarded so
-    * a crash-stranded `._tmp` staging file is never parsed as a
-    * manifest. */
+  /** The COMMITTED manifest versions among `names` (a crash-stranded
+    * staging file never parses as one). */
   private def manifestVersions(names: Iterable[String]): Seq[Long] =
-    names.filter(_.startsWith(ManifestPrefix))
-      .map(_.stripPrefix(ManifestPrefix))
-      .filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong).toSeq
+    Writers.versionsNamed(names, ManifestPrefix)
 
   /** Stamp version `v`'s CUMULATIVE bucket→version map ("b v" lines) —
     * the `_delta_log`-checkpoint analogue: ONE small file resolves
     * every bucket as of v, so read-side metadata stays O(1) however
-    * long the CDC stream has run. Written temp-then-rename (w09's
-    * loud-fail contract): a manifest is a COMMIT RECORD that nothing
-    * replays once later versions land, so a crash mid-write must leave
-    * it MISSING (the top-up path recovers a missing manifest) rather
-    * than truncated (a corrupt one would poison every later cumulative
-    * build). */
+    * long the CDC stream has run. Written through
+    * [[Writers.commitSmallFile]] (w09's loud-fail contract): a manifest
+    * is a COMMIT RECORD that nothing replays once later versions land,
+    * so a crash mid-write must leave it MISSING (the listing top-up
+    * recovers a missing manifest) rather than truncated (a corrupt one
+    * would poison every later cumulative build). */
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, v: Long,
-      byBucket: Map[Int, Long]): Unit = {
-    val dest = manifestPath(root, v)
-    val tmpP = new org.apache.hadoop.fs.Path(root, s"$ManifestPrefix$v._tmp")
-    val out = fs.create(tmpP, true)
-    try out.write(byBucket.toSeq.sorted
-      .map { case (b, ver) => s"$b $ver" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // delete-then-rename: HDFS rename refuses an existing destination;
-    // a crash between the two leaves the manifest absent, which the
-    // listing top-up absorbs
-    fs.delete(dest, false)
-    require(fs.rename(tmpP, dest),
-      s"writeManifest: rename $tmpP -> $dest failed; the version's " +
-        "commit record is in the ._tmp file")
-  }
+      byBucket: Map[Int, Long]): Unit =
+    Writers.commitSmallFile(fs, manifestPath(root, v))(_.write(
+      byBucket.toSeq.sorted.map { case (b, ver) => s"$b $ver" }
+        .mkString("\n").getBytes("UTF-8")))
 
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, v: Long): Map[Int, Long] = {

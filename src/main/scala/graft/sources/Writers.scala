@@ -123,6 +123,33 @@ object Writers {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** Commit one small driver-written file at `dest` (a commit record,
+    * a sketch version): `write` fills a staging sibling, which then
+    * replaces `dest` by delete-then-rename (HDFS rename refuses an
+    * existing destination). A crash leaves `dest` either absent or
+    * whole, never truncated. The staging name `_staging.<name>` puts
+    * `<name>` behind a prefix of its own, so [[versionsNamed]] never
+    * parses a stranded one. */
+  def commitSmallFile(fs: org.apache.hadoop.fs.FileSystem,
+      dest: org.apache.hadoop.fs.Path)(
+      write: java.io.OutputStream => Unit): Unit = {
+    val tmpP = new org.apache.hadoop.fs.Path(dest.getParent,
+      s"_staging.${dest.getName}")
+    val out = fs.create(tmpP, true)
+    try write(out) finally out.close()
+    fs.delete(dest, false)
+    require(fs.rename(tmpP, dest),
+      s"commitSmallFile: rename $tmpP -> $dest failed; the content " +
+        "is in the staging file")
+  }
+
+  /** The versions `n` among `names` of the form `<prefix><n>`, digits
+    * only, so a staging or foreign file never parses as a version. */
+  def versionsNamed(names: Iterable[String], prefix: String): Seq[Long] =
+    names.filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+      .filter(n => n.nonEmpty && n.forall(_.isDigit))
+      .map(_.toLong).toSeq
+
   /** INCREMENTAL optimize over a partitioned table root (w09, the
     * `OPTIMIZE ... WHERE` shape of modern table formats): list each
     * `key=value` partition directory's file count and rewrite ONLY the

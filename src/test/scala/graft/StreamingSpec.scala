@@ -914,15 +914,54 @@ class StreamingSpec extends AnyFunSuite {
     streaming.Streams.catchUp(src,
       Seq(1, 2).map(k => docs.filter(pmod($"doc_id", lit(3)) === k)))(
       startQuery())
-    val latest = new java.io.File(state).listFiles()
-      .map(_.getName).filter(_.startsWith("v")).map(_.drop(1).toInt).max
-    val streamed = spark.read.parquet(s"$state/v$latest")
-      .collect()(0).getAs[Array[Byte]]("cms")
+    val sq = operators.StreamingQueries
+    val streamed = sq.readCms(spark,
+      s"$state/v${sq.cmsLatestVersion(spark, state)}").toByteArray
     val oneShot = operators.Analytics.cmsShingles(spark, sf)
       .agg(expr(operators.Analytics.CmsAgg).as("cms")).collect()(0)
       .getAs[Array[Byte]]("cms")
     assert(java.util.Arrays.equals(streamed, oneShot),
       "streamed CMS state diverges from the one-shot batch sketch")
+  }
+
+  test("st18: each CMS version is one plain file, a replayed batch" +
+      " rewrites its version byte-identically, and a stranded staging" +
+      " file is ignored by the latest-version pick") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val sq = operators.StreamingQueries
+    val base = tempDir("graft_st18files")
+    val state = s"$base/sketch"
+    sources.Writers.freshScratch(spark, base)
+    sq.writeCms(spark,
+      org.apache.spark.util.sketch.CountMinSketch.create(0.001, 0.99, 42),
+      s"$state/v0")
+    val batch = sources.Tables.documents(spark, sf)
+      .select($"doc_id", $"text").filter(pmod($"doc_id", lit(3)) === 0)
+    sq.cmsMergeStep(state)(batch, 0L)
+    val v1 = Paths.get(state, "v1")
+    assert(Files.isRegularFile(v1), s"$v1 is not one plain file")
+    val committed = Files.readAllBytes(v1)
+    // the file is the sketch's own serialization, nothing around it
+    assert(java.util.Arrays.equals(committed,
+      sq.readCms(spark, v1.toString).toByteArray))
+    // a restart replays batch 0: it re-reads v0 and replaces v1 whole
+    sq.cmsMergeStep(state)(batch, 0L)
+    assert(java.util.Arrays.equals(Files.readAllBytes(v1), committed),
+      "replaying batch 0 changed v1's bytes")
+    // a crash mid-write of v2 strands its staging file beside v0/v1
+    val (fs, statePath) = sources.Writers.fsOf(spark, state)
+    intercept[IllegalStateException] {
+      sources.Writers.commitSmallFile(fs,
+        new org.apache.hadoop.fs.Path(statePath, "v2")) { out =>
+        out.write(committed, 0, 100)
+        throw new IllegalStateException("crash")
+      }
+    }
+    val names = fs.listStatus(statePath).map(_.getPath.getName).toSet
+    assert(names.size == 3 && Set("v0", "v1").subsetOf(names),
+      s"expected v0, v1 and one staging file, got $names")
+    assert(sq.cmsLatestVersion(spark, state) == 1L)
   }
 
   test("st17: checkpointed restart resumes the CDC->SCD2 merge chain" +
